@@ -25,18 +25,15 @@ object PartitionedAppend {
     * `key` column) into the store at `path`. Safe to replay. */
   def append(assigned: DataFrame, path: String, partCol: String, key: String): Unit = {
     val spark = assigned.sparkSession
-    val hadoopPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // same loud-failure contract as idempotentAppend: only a genuinely
-    // absent/empty store skips the anti-join
-    def hasData: Boolean = fs.exists(hadoopPath) &&
-      fs.listStatus(hadoopPath).exists(s => s.isDirectory || s.getPath.getName.startsWith("part-"))
+    // same loud-failure contract as idempotentAppend: only a store with
+    // no data entries skips the anti-join
     val fresh =
-      if (hasData) {
+      if (StoreListing.hasData(spark, path)) {
         // bounded driver read: the batch's distinct partition values
         val touched = assigned.select(col(partCol)).distinct()
           .collect().map(_.get(0))
-        val existing = spark.read.parquet(path)
+        val existing = spark.read.schema(assigned.select(col(key), col(partCol)).schema)
+          .parquet(path)
           .filter(col(partCol).isin(touched: _*)) // partition-pruned scan
           .select(key)
         assigned.join(existing, Seq(key), "left_anti")

@@ -95,32 +95,30 @@ object Streams {
 
   // ------------------------------------------------------------------
   // K3: idempotent append — the `INSERT ... ON CONFLICT DO NOTHING`
-  // analog for object storage. Dedup inside the batch, anti-join
-  // against keys already on disk, then append. At scale the anti-join
-  // prunes to the partitions the batch touches; with deterministic ids
-  // (T9) replays become no-ops, which is the reference's entire
-  // exactly-once strategy (deterministic id + unique constraint).
+  // analog for object storage. With deterministic ids (T9) replays
+  // become no-ops, which is the reference's entire exactly-once
+  // strategy (deterministic id + unique constraint).
+  //
+  // Cost per batch is O(batch), whatever the store size
+  // ([[IdempotentStore]]): one directory listing, one staged write of
+  // the deduplicated batch (2 Spark jobs: its dedup shuffle and the
+  // write), and a rename of the staged files into the store. The store
+  // is read only where it can conflict: an in-process manifest holds
+  // each data file's key-column [lo, hi] (memory O(files)), and the
+  // batch is anti-joined against just the files whose range overlaps
+  // its own on every key column — replays, late duplicates, keys that
+  // are not monotonic. Files the manifest has not seen (first use in a
+  // JVM, another writer) cost one min/max job, once. A store with
+  // sub-directories falls back to the full anti-join. Null keys never
+  // conflict, as under a SQL unique constraint. A store file that was
+  // rewritten or is corrupt fails the append loudly.
+  //
+  // Across processes the sink is still read-then-append: two processes
+  // appending the same new key at the same moment can both append it.
+  // Appends within one process are serialized per store.
   // ------------------------------------------------------------------
-  def idempotentAppend(batch: DataFrame, keyCols: Seq[String], path: String): Unit = {
-    val spark = batch.sparkSession
-    val deduped = batch.dropDuplicates(keyCols)
-    val hadoopPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Only a genuinely absent/empty store means "first write" (an empty
-    // pre-created directory, or one holding only a _SUCCESS marker, has
-    // no data to anti-join against). A present store that fails to READ
-    // (transient IO, corrupt footer, permissions) must fail loudly —
-    // silently skipping the anti-join would append duplicates,
-    // defeating the idempotence this sink exists for.
-    def hasData: Boolean = fs.exists(hadoopPath) &&
-      fs.listStatus(hadoopPath).exists(s => s.isDirectory || s.getPath.getName.startsWith("part-"))
-    val fresh =
-      if (hasData) {
-        val existing = spark.read.parquet(path).select(keyCols.map(col): _*)
-        deduped.join(existing, keyCols, "left_anti")
-      } else deduped
-    fresh.write.mode("append").parquet(path)
-  }
+  def idempotentAppend(batch: DataFrame, keyCols: Seq[String], path: String): Unit =
+    IdempotentStore.append(batch, keyCols, path)
 
   /** foreachBatch wiring of [[idempotentAppend]] for a streaming query. */
   def idempotentSink(stream: DataFrame, keyCols: Seq[String], path: String): DataStreamWriter[org.apache.spark.sql.Row] =

@@ -116,17 +116,114 @@ class StreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  /** Names of the sink's hidden staging directories left under `path`. */
+  private def stagingDirs(path: String): Seq[String] =
+    new java.io.File(path).list().toSeq.filter(_.startsWith("_staging-"))
+
   test("idempotentAppend: replaying the same keys is a no-op") {
     import spark.implicits._
     val path = tmpDir("idem")
+    // an empty first batch leaves a store that reads back with its schema
+    val empty = Seq.empty[(Long, String)].toDF("id", "payload")
+    Streams.idempotentAppend(empty, Seq("id"), path)
+    assert(spark.read.parquet(path).columns.toSeq == Seq("id", "payload"))
     val batch1 = Seq((1L, "a"), (1L, "a-dup"), (2L, "b")).toDF("id", "payload")
     Streams.idempotentAppend(batch1, Seq("id"), path)
-    // replay with one overlapping and one new key
+    val parts = new java.io.File(path).list().count(_.startsWith("part-"))
+    Streams.idempotentAppend(empty, Seq("id"), path) // adds no file
+    assert(new java.io.File(path).list().count(_.startsWith("part-")) == parts)
+    // replay with one overlapping and one new key: only the fresh key
+    // lands, and the stored row of the old key is left as it was
     val batch2 = Seq((2L, "b-replay"), (3L, "c")).toDF("id", "payload")
     Streams.idempotentAppend(batch2, Seq("id"), path)
-    val stored = spark.read.parquet(path)
-    assert(stored.count() == 3)
-    assert(stored.select($"id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+    // a part file dropped in by a plain writer is honoured as well
+    Seq((4L, "d")).toDF("id", "payload").write.mode("append").parquet(path)
+    Streams.idempotentAppend(Seq((4L, "d-replay"), (5L, "e")).toDF("id", "payload"), Seq("id"), path)
+    val stored = spark.read.parquet(path).as[(Long, String)].collect().toMap
+    assert(stored.keys.toSeq.sorted == Seq(1L, 2L, 3L, 4L, 5L))
+    assert(stored(2L) == "b" && stored(3L) == "c" && stored(4L) == "d" && stored(5L) == "e")
+    assert(spark.read.parquet(path).count() == 5)
+    assert(stagingDirs(path).isEmpty)
+  }
+
+  test("idempotentAppend: a partially overlapping multi-column batch appends only its fresh keys") {
+    import spark.implicits._
+    val path = tmpDir("idem_multi")
+    val first = (1L to 20L).map(i => (if (i % 2 == 0) "KRW-A" else "KRW-B", i, s"v$i"))
+    Streams.idempotentAppend(first.toDF("code", "seq", "v"), Seq("code", "seq"), path)
+    // overlaps [11, 20] and adds [21, 30]; ("KRW-C", 15) is fresh although
+    // its seq lies inside the stored range
+    val second = (11L to 30L).map(i => (if (i % 2 == 0) "KRW-A" else "KRW-B", i, s"w$i")) :+
+      (("KRW-C", 15L, "c15"))
+    Streams.idempotentAppend(second.toDF("code", "seq", "v"), Seq("code", "seq"), path)
+    val stored = spark.read.parquet(path).as[(String, Long, String)].collect()
+    assert(stored.length == 31)
+    assert(stored.map(r => (r._1, r._2)).distinct.length == 31)
+    assert(stored.filter(_._2 <= 20).filter(_._1 != "KRW-C").forall(_._3.startsWith("v")))
+    assert(stored.filter(_._2 > 20).forall(_._3.startsWith("w")))
+    assert(stored.exists(_ == (("KRW-C", 15L, "c15"))))
+    assert(stagingDirs(path).isEmpty)
+  }
+
+  test("idempotentAppend: rows with a null key are appended again on replay") {
+    import spark.implicits._
+    // as under a SQL unique constraint, NULL never equals NULL: a null
+    // key conflicts with nothing, including its own earlier copy
+    val path = tmpDir("idem_null")
+    val batch = Seq[(String, java.lang.Long, String)](
+      ("KRW-A", 1L, "keyed"), (null, 2L, "null-code"), ("KRW-A", null, "null-seq"))
+      .toDF("code", "seq", "v")
+    Streams.idempotentAppend(batch, Seq("code", "seq"), path)
+    Streams.idempotentAppend(batch, Seq("code", "seq"), path)
+    // a batch whose keys are all null overlaps no stored range either
+    Streams.idempotentAppend(batch.filter($"seq".isNull), Seq("code", "seq"), path)
+    val byV = spark.read.parquet(path).groupBy($"v").count().as[(String, Long)].collect().toMap
+    assert(byV == Map("keyed" -> 1L, "null-code" -> 2L, "null-seq" -> 3L))
+  }
+
+  test("idempotentAppend: a store holding only a crashed write's _temporary/ takes appends") {
+    import spark.implicits._
+    val path = tmpDir("idem_tmp_only")
+    // what a first write that died before its job commit leaves behind
+    new java.io.File(s"$path/_temporary/0/_temporary").mkdirs()
+    val batch = Seq((1L, "a"), (2L, "b")).toDF("id", "payload")
+    Streams.idempotentAppend(batch, Seq("id"), path)
+    Streams.idempotentAppend(batch, Seq("id"), path)
+    assert(spark.read.parquet(path).select($"id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+  }
+
+  test("idempotentAppend: an append after N disjoint ones reads no store file and runs 2 jobs") {
+    import spark.implicits._
+    import org.apache.spark.scheduler._
+    val path = tmpDir("idem_scale")
+    def batch(n: Int) = (n * 100L until n * 100L + 100L).map(i => (i, s"p$i")).toDF("id", "payload")
+    (0 until 12).foreach(n => Streams.idempotentAppend(batch(n), Seq("id"), path))
+    val group = s"idem-scale-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val bytesRead = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet(); e.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          bytesRead.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.GraftListenerAccess.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "idempotentAppend scale check")
+    try Streams.idempotentAppend(batch(12), Seq("id"), path)
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.GraftListenerAccess.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get == 2, "one staged write: its dedup shuffle and the write")
+    assert(bytesRead.get == 0L, "no store file is read")
+    assert(spark.read.parquet(path).count() == 1300)
   }
 
   test("idempotentAppend: an unreadable existing store fails loudly instead of duplicating") {
@@ -142,6 +239,7 @@ class StreamsSpec extends SparkSpec {
     intercept[Exception] { Streams.idempotentAppend(replay, Seq("id"), path) }
     // nothing was appended: the corrupt part is still the only content
     assert(dir.listFiles().count(_.getName.startsWith("part-")) == 1)
+    assert(stagingDirs(path).isEmpty)
   }
 
   test("routeByType: one partitioned write, each type independently readable") {

@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions._
   * byte-level codec path). Each stage's time is CUMULATIVE (stage k
   * re-runs stages 1..k-1 — no caches), so deltas between lines give
   * per-stage cost. The store write uses a throwaway dir per pass so
-  * every pass pays the first-run append the bench charges.
+  * every pass pays the first-run append the bench charges; the same
+  * chain is then appended again into that store, which costs the
+  * replay (every key overlaps) path.
   * Run: sbt "Test/runMain graft.tools.WireProbe <sfDir> [passes]"
   */
 object WireProbe {
@@ -40,13 +42,16 @@ object WireProbe {
         Streams.tradesFromProtoRecords(Streams.tradeProtoRecords(
           UpbitWire.parseTrades(WireIngest.frames(spark, dir), "frame", "Upbit", col5))).count()
       }
-      t("full chain + fresh store") {
-        val store = java.nio.file.Files.createTempDirectory("graft_wireprobe").toString
+      val store = java.nio.file.Files.createTempDirectory("graft_wireprobe").toString
+      def appendChain(): Long = {
         val decoded = Streams.tradesFromProtoRecords(Streams.tradeProtoRecords(
           UpbitWire.parseTrades(WireIngest.frames(spark, dir), "frame", "Upbit", col5)))
         Streams.idempotentAppend(decoded.toDF(), Seq("code", "sequentialId"), store)
         WireIngest.readTradeStore(spark, store).count()
       }
+      t("full chain + fresh store")(appendChain())
+      // every key is already stored: the overlap/anti-join path
+      t("full chain + replay store")(appendChain())
       t("q_wire_books full") {
         graft.SparkEntry.queries("q_wire_books")(spark, dir).count()
       }
