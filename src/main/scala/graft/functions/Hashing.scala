@@ -90,12 +90,10 @@ object Hashing {
         zip_with(counts, BitMasks, (c, m) => when(c > 0, m).otherwise(lit(0L))),
         lit(0L), (acc, x) => acc + x))
 
-  /** Jaccard similarity of two string-array columns (as sets). */
-  def jaccard(a: Column, b: Column): Column = {
-    val inter = size(array_intersect(a, b)).cast("double")
-    val union = size(array_union(a, b)).cast("double")
-    when(union === 0, 0.0).otherwise(inter / union)
-  }
+  /** Jaccard similarity of two `array<bigint>` or two `array<string>`
+    * columns taken as sets; 0.0 for an empty union
+    * ([[TextKernelFunctions.jaccard]], the `graft_jaccard` kernel). */
+  def jaccard(a: Column, b: Column): Column = TextKernelFunctions.jaccard(a, b)
 
   // ------------------------------------------------------------------
   // DuckDB-side mirrors (SQL text fragments used by SparkEntry.oracleSql

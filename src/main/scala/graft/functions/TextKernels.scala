@@ -4,11 +4,12 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpressionInfo, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -373,6 +374,140 @@ case class SimHash60Expr(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(newChild: Expression): SimHash60Expr = copy(child = newChild)
 }
 
+/**
+ * Set Jaccard |A∩B| / |A∪B| of two arrays taken as sets, the one
+ * kernel behind every near-duplicate verify ([[Hashing.jaccard]]).
+ * It computes exactly what `size(array_intersect) / size(array_union)`
+ * did (duplicates collapse, a null element is one member, an empty
+ * union is 0.0) without building either result array:
+ *
+ *  - `longs` copies both sides into reused `long[]` buffers, sorts
+ *    them and counts |A|, |B| and |A∩B| over distinct values in one
+ *    merge pass; the union is |A| + |B| − |A∩B|;
+ *  - `strings` counts the same through two reused hash sets.
+ *
+ * Generated code holds one instance per task (mutable state), so the
+ * per-pair path allocates nothing once the buffers fit; not thread-safe.
+ */
+final class JaccardBuffers {
+  private var xs = new Array[Long](64)
+  private var ys = new Array[Long](64)
+  private val setA = new java.util.HashSet[UTF8String]
+  private val setB = new java.util.HashSet[UTF8String]
+
+  private def ratio(inter: Int, union: Int): Double =
+    if (union == 0) 0.0 else inter.toDouble / union.toDouble
+
+  /** Copies the non-null elements of `a` into `buf` (large enough) and
+    * sorts them. Returns their count n, or −n − 1 if `a` holds a null. */
+  private def sortNonNull(a: ArrayData, buf: Array[Long]): Int = {
+    var n = 0
+    var hasNull = false
+    var i = 0
+    while (i < a.numElements()) {
+      if (a.isNullAt(i)) hasNull = true
+      else { buf(n) = a.getLong(i); n += 1 }
+      i += 1
+    }
+    java.util.Arrays.sort(buf, 0, n)
+    if (hasNull) -n - 1 else n
+  }
+
+  /** Index of the first element after the run of `v(i)`. */
+  private def skipRun(v: Array[Long], i: Int, n: Int): Int = {
+    val x = v(i)
+    var k = i + 1
+    while (k < n && v(k) == x) k += 1
+    k
+  }
+
+  def longs(a: ArrayData, b: ArrayData): Double = {
+    if (xs.length < a.numElements()) xs = new Array[Long](2 * a.numElements())
+    if (ys.length < b.numElements()) ys = new Array[Long](2 * b.numElements())
+    val x = xs
+    val y = ys
+    val ca = sortNonNull(a, x)
+    val cb = sortNonNull(b, y)
+    val n = if (ca < 0) -ca - 1 else ca
+    val m = if (cb < 0) -cb - 1 else cb
+    val nullA = if (ca < 0) 1 else 0
+    val nullB = if (cb < 0) 1 else 0
+    var da = nullA
+    var db = nullB
+    var inter = nullA & nullB
+    var i = 0
+    var j = 0
+    while (i < n && j < m) {
+      val u = x(i)
+      val v = y(j)
+      if (u < v) { da += 1; i = skipRun(x, i, n) }
+      else if (u > v) { db += 1; j = skipRun(y, j, m) }
+      else { da += 1; db += 1; inter += 1; i = skipRun(x, i, n); j = skipRun(y, j, m) }
+    }
+    while (i < n) { da += 1; i = skipRun(x, i, n) }
+    while (j < m) { db += 1; j = skipRun(y, j, m) }
+    ratio(inter, da + db - inter)
+  }
+
+  def strings(a: ArrayData, b: ArrayData): Double = {
+    setA.clear()
+    setB.clear()
+    var nullA = 0
+    var i = 0
+    while (i < a.numElements()) {
+      if (a.isNullAt(i)) nullA = 1 else setA.add(a.getUTF8String(i))
+      i += 1
+    }
+    var nullB = 0
+    var inter = 0
+    i = 0
+    while (i < b.numElements()) {
+      if (b.isNullAt(i)) nullB = 1
+      else {
+        val e = b.getUTF8String(i)
+        if (setB.add(e) && setA.contains(e)) inter += 1
+      }
+      i += 1
+    }
+    inter += nullA & nullB
+    ratio(inter, setA.size + nullA + setB.size + nullB - inter)
+  }
+}
+
+/** `graft_jaccard(a, b)`: set Jaccard of two `array<bigint>` or two
+  * `array<string>` columns; null when either array is null. */
+case class JaccardExpr(left: Expression, right: Expression) extends BinaryExpression {
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "graft_jaccard"
+
+  private def overLongs: Boolean =
+    left.dataType.asInstanceOf[ArrayType].elementType == LongType
+
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
+    // `StringType` is the UTF8_BINARY collation: byte equality
+    case (ArrayType(StringType, _), ArrayType(StringType, _)) => TypeCheckResult.TypeCheckSuccess
+    case (l, r) => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName takes two array<bigint> or two array<string>, got ${l.simpleString} and ${r.simpleString}")
+  }
+
+  override protected def nullSafeEval(a: Any, b: Any): Any = {
+    val k = new JaccardBuffers
+    if (overLongs) k.longs(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    else k.strings(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = classOf[JaccardBuffers].getName
+    val k = ctx.addMutableState(cls, "jaccardBuffers", v => s"$v = new $cls();")
+    val method = if (overLongs) "longs" else "strings"
+    defineCodeGen(ctx, ev, (a, b) => s"$k.$method($a, $b)")
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): JaccardExpr =
+    copy(left = newLeft, right = newRight)
+}
+
 object TextKernelFunctions {
 
   def shingleSet(text: Column): Column = call_function("graft_shingle_set", text)
@@ -383,6 +518,7 @@ object TextKernelFunctions {
   def simhash60(text: Column): Column = call_function("graft_simhash60", text)
   def phash60(text: Column): Column = call_function("graft_phash60", text)
   def aphash60(text: Column): Column = call_function("graft_aphash60", text)
+  def jaccard(a: Column, b: Column): Column = call_function("graft_jaccard", a, b)
 
   private def reg1(name: String, build: Expression => Expression) = (
     FunctionIdentifier(name),
@@ -390,6 +526,14 @@ object TextKernelFunctions {
     (children: Seq[Expression]) => {
       require(children.size == 1, s"$name takes exactly 1 argument")
       build(children.head)
+    })
+
+  private def reg2(name: String, build: (Expression, Expression) => Expression) = (
+    FunctionIdentifier(name),
+    new ExpressionInfo(getClass.getName, name),
+    (children: Seq[Expression]) => {
+      require(children.size == 2, s"$name takes exactly 2 arguments")
+      build(children(0), children(1))
     })
 
   val registrations: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
@@ -400,5 +544,6 @@ object TextKernelFunctions {
     reg1("graft_minhash_sig", MinHashSigExpr),
     reg1("graft_simhash60", SimHash60Expr),
     reg1("graft_phash60", PHash60Expr),
-    reg1("graft_aphash60", APHash60Expr))
+    reg1("graft_aphash60", APHash60Expr),
+    reg2("graft_jaccard", JaccardExpr))
 }

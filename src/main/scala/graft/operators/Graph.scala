@@ -1230,9 +1230,11 @@ object Graph {
 
   /** Gate: entities in the (avg-degree div 2)-core of the transaction
     * graph with their in-core degree. The converged core store is
-    * memoized per (session, dir) like [[qCheapestPath]]'s costs, so
-    * repeated gate calls reuse one materialized frame and
-    * [[invalidateEdgeStore]] reclaims it. */
+    * memoized per (session, dir) under `kcore_edges` in the frame
+    * cache, so repeated gate calls reuse one materialized frame. It is
+    * a query result, not an input store: [[invalidateResultMemos]]
+    * drops it between timed passes, and [[invalidateEdgeStore]]
+    * reclaims it with the rest. */
   def qKCore(spark: SparkSession, dir: String): DataFrame = {
     cachedFrame(spark, dir, "kcore_edges") {
       val sym = transactionEdgeStore(spark, dir).fresh().select($"src", $"dst")

@@ -64,10 +64,14 @@ object UpbitWire {
 
   /** Enum-name normalization: trim+upper, membership check, unknown →
     * "" (the string face of proto3 UNSPECIFIED = 0; ProtoCodec encodes
-    * "" by omission). Mirrors `_to_*_enum` (protobuf_mapper.py:85-101). */
+    * "" by omission). Mirrors `_to_*_enum` (protobuf_mapper.py:85-101).
+    * An already-canonical name is returned without `upper`, which on
+    * Spark's UTF8_BINARY strings runs through ICU; the names are
+    * upper-case, so the result is the same. */
   private def enumNorm(c: Column, valid: Seq[String]): Column = {
-    val u = upper(trim(c))
-    when(u.isin(valid: _*), u).otherwise(lit(""))
+    val t = trim(c)
+    val u = upper(t)
+    when(t.isin(valid: _*), t).when(u.isin(valid: _*), u).otherwise(lit(""))
   }
 
   private def zeroIfNull(c: Column): Column = coalesce(c, lit(0.0))

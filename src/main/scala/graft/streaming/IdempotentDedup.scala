@@ -15,14 +15,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  * UNIQUE-within-window semantic) and emits deterministically (first
  * row by event time, not arrival order).
  *
- * Note: Spark 4's `transformWithState` offers native per-state TTL
- * (`TTLConfig` + RocksDB provider); that variant is implemented behind
- * a flag in [[NativeTtlDedup]] and retried each round — in this
- * environment the RocksDB provider stalls the first micro-batch (see
- * the note there). Here the TTL is event-time bookkeeping inside
- * `flatMapGroupsWithState` — which stays the canonical path anyway:
- * event-time TTL replays deterministically (proven batching-invariant
- * by the property spec), which processing-time TTL does not.
+ * The TTL is event-time bookkeeping inside `flatMapGroupsWithState`.
+ * Spark 4's `transformWithState` TTL (`TTLConfig`) is processing-time:
+ * it schedules a micro-batch on every trigger, so a query never goes
+ * idle, and it does not replay deterministically, where event-time TTL
+ * does (proven batching-invariant by the property spec).
  */
 object IdempotentDedup {
 
@@ -76,9 +73,8 @@ object IdempotentDedup {
   /** The BUILT-IN declarative variant for the common case: native
     * `dropDuplicatesWithinWatermark` on signal_id, state evicted by the
     * engine once the watermark passes an id's last-seen + delay — no
-    * user state code, runs on the DEFAULT state store (unlike the
-    * RocksDB-backed transformWithState path, [[NativeTtlDedup]], which
-    * stalls in this environment). Semantic differences from
+    * user state code, runs on the default state store. Semantic
+    * differences from
     * [[dedupStream]], which stays the canonical exactly-once path:
     * the built-in keeps the ARRIVAL-first row (not event-time-first,
     * so cross-batch replay determinism needs ordered delivery) and

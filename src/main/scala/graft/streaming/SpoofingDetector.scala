@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.Dataset
+import java.nio.ByteBuffer
+
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -215,6 +217,44 @@ object SpoofingDetector {
        |  AND (next_pres IS NULL OR next_pres > idx + 1)
        |ORDER BY code, armed_at_ms, price""".stripMargin
 
+  /** [[SpoofState]] as the streaming face stores it: the armed levels
+    * as (price, size, deadline) triples sorted by price, and the
+    * verified prices sorted, each packed into a byte array. A binary
+    * column deserializes without lambdas. A `Map`/`Set` field, and even
+    * an `Array[Double]` one (`MapObjects`), carries lambda variables
+    * numbered from a global counter, so the fresh resolution of the
+    * state encoder in each micro-batch generated new source and one
+    * more Janino compile. */
+  final case class StoredState(armed: Array[Byte], verified: Array[Byte]) {
+    def toSpoofState: SpoofState = {
+      val a = ByteBuffer.wrap(armed)
+      val levels = Map.newBuilder[Double, (Double, Long)]
+      while (a.hasRemaining) {
+        val price = a.getDouble
+        val size = a.getDouble
+        levels += price -> ((size, a.getLong))
+      }
+      val v = ByteBuffer.wrap(verified)
+      val prices = Set.newBuilder[Double]
+      while (v.hasRemaining) prices += v.getDouble
+      SpoofState(levels.result(), prices.result())
+    }
+  }
+
+  object StoredState {
+    def of(s: SpoofState): StoredState = {
+      val a = ByteBuffer.allocate(24 * s.armed.size)
+      s.armed.toSeq.sortBy(_._1).foreach { case (price, (size, deadline)) =>
+        a.putDouble(price).putDouble(size).putLong(deadline)
+      }
+      val v = ByteBuffer.allocate(8 * s.verified.size)
+      s.verified.toSeq.sorted.foreach(v.putDouble)
+      StoredState(a.array, v.array)
+    }
+  }
+
+  val stateEncoder: Encoder[StoredState] = Encoders.product[StoredState]
+
   /** Streaming face, state carried across micro-batches. */
   def detectStream(books: Dataset[Book]): Dataset[SpoofAlert] = {
     import books.sparkSession.implicits._
@@ -223,17 +263,16 @@ object SpoofingDetector {
       .withWatermark("eventTime", "0 seconds")
       .as[Book]
       .groupByKey(_.code)
-      .flatMapGroupsWithState[SpoofState, SpoofAlert](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, it: Iterator[Book], state: GroupState[SpoofState]) =>
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (_: String, it: Iterator[Book], state: GroupState[StoredState]) =>
           if (it.isEmpty) Iterator.empty
           else {
             val (s, alerts) = runKey(it.toVector.sortBy(_.ts_ms).iterator,
-              state.getOption.getOrElse(Empty))
+              state.getOption.fold(Empty)(_.toSpoofState))
             if (s.armed.isEmpty && s.verified.isEmpty) state.remove()
-            else state.update(s)
+            else state.update(StoredState.of(s))
             alerts.iterator
           }
-      }
+      }(stateEncoder, implicitly[Encoder[SpoofAlert]])
   }
 }

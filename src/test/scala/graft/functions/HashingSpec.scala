@@ -2,8 +2,12 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.Row
+import scala.util.Random
+
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 
 import graft.SparkSpec
 import graft.functions.Hashing._
@@ -66,6 +70,83 @@ class HashingSpec extends SparkSpec {
       (Seq.empty[String], Seq.empty[String])).toDF("x", "y")
     val got = df.select(jaccard(col("x"), col("y"))).collect().map(_.getDouble(0)).toSeq
     assert(got == Seq(1.0, 0.0, 0.0))
+  }
+
+  /** The Jaccard formula `graft_jaccard` replaced, kept as its reference. */
+  private def jaccardReference(a: Column, b: Column): Column = {
+    val inter = size(array_intersect(a, b)).cast("double")
+    val union = size(array_union(a, b)).cast("double")
+    when(union === 0, 0.0).otherwise(inter / union)
+  }
+
+  /** Random pairs over a small domain (so duplicates and overlaps are
+    * common) with null elements, empty arrays and null arrays, plus the
+    * edge pairs spelled out. */
+  private def jaccardPairs[T](draw: Random => T): Seq[Row] = {
+    val rnd = new Random(42)
+    def arr(): Seq[Any] =
+      if (rnd.nextInt(20) == 0) null
+      else Seq.fill(rnd.nextInt(13))(if (rnd.nextInt(10) == 0) null else draw(rnd))
+    val edges: Seq[(Seq[Any], Seq[Any])] = Seq(
+      (null, null), (Seq(), Seq()), (Seq(), null), (Seq(null), Seq(null)),
+      (Seq(null), Seq()), (Seq(null, null), Seq(null)))
+    (edges ++ Seq.fill(600)((arr(), arr()))).map { case (a, b) => Row(a, b) }
+  }
+
+  private def assertKernelMatchesReference(rows: Seq[Row], elem: DataType): Unit = {
+    val schema = StructType(Seq(
+      StructField("x", ArrayType(elem), nullable = true),
+      StructField("y", ArrayType(elem), nullable = true)))
+    // an RDD source, so the optimizer cannot fold the projection into a
+    // local relation evaluated while planning
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    def run(wholeStage: String, factory: String): Array[Row] = {
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      spark.conf.set("spark.sql.codegen.factoryMode", factory)
+      try {
+        val q = df.select(jaccard(col("x"), col("y")).as("k"),
+          jaccardReference(col("x"), col("y")).as("ref"))
+        val plan = q.queryExecution.executedPlan
+        assert(plan.toString.contains("graft_jaccard"))
+        assert(plan.exists(_.isInstanceOf[WholeStageCodegenExec]) == (wholeStage == "true"))
+        q.collect()
+      } finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
+    for ((mode, got) <- Seq("interpreted" -> run("false", "NO_CODEGEN"),
+        "codegen" -> run("true", "CODEGEN_ONLY"))) {
+      assert(got.length == rows.length)
+      got.zip(rows).foreach { case (r, in) =>
+        assert(r.get(0) == r.get(1), s"$mode: graft_jaccard ${r.get(0)} != reference ${r.get(1)} on $in")
+      }
+      assert(got.exists(r => !r.isNullAt(0) && r.getDouble(0) > 0.0 && r.getDouble(0) < 1.0))
+    }
+  }
+
+  test("graft_jaccard equals the array_intersect/array_union formula on bigint arrays") {
+    assertKernelMatchesReference(jaccardPairs(r => (r.nextInt(16) - 4).toLong), LongType)
+  }
+
+  test("graft_jaccard equals the array_intersect/array_union formula on string arrays") {
+    val words = Seq("a", "b", "c b", "é", "ſ", "S", "s", "", " ", "long shingle text")
+    assertKernelMatchesReference(jaccardPairs(r => words(r.nextInt(words.size))), StringType)
+  }
+
+  test("graft_jaccard rejects arrays that are not bigint or string at analysis") {
+    import spark.implicits._
+    val df = Seq((Seq(1, 2), Seq(2, 3))).toDF("x", "y")
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      df.select(jaccard(col("x"), col("y"))).collect())
+    assert(e.getMessage.contains("graft_jaccard"))
+  }
+
+  test("q_ngram_jaccard verifies pairs with graft_jaccard, not array_union/array_intersect") {
+    val plan = graft.operators.Dedup.qNgramJaccard(spark, graft.SparkSpec.Sf0001)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("graft_jaccard"))
+    assert(!plan.contains("array_union") && !plan.contains("array_intersect"))
   }
 
   test("TextKernels match their composed-expression twins on the real corpus") {

@@ -135,6 +135,24 @@ class UpbitWireSpec extends SparkSpec {
     assert(t.exchange === "") // unknown exchange → UNSPECIFIED
   }
 
+  test("enum normalization: padded, lower-case, non-ASCII case folds and unknown names") {
+    def trade(askBid: String, change: String) =
+      s"""{"type":"trade","code":"KRW-BTC","ask_bid":"$askBid","change":"$change","trade_timestamp":1}"""
+    val cases = Seq(
+      ("ASK", "RISE") -> ("ASK", "RISE"),
+      ("  BID ", " EVEN") -> ("BID", "EVEN"),
+      ("ask", "fall") -> ("ASK", "FALL"),
+      (" Bid  ", "Rise ") -> ("BID", "RISE"),
+      ("aſk", "riſe") -> ("ASK", "RISE"),   // long s upper-cases to S
+      ("bıd", "EVEN") -> ("BID", "EVEN"),   // dotless i upper-cases to I
+      ("ASKS", "RISING") -> ("", ""),
+      ("", " ") -> ("", ""),
+      ("a sk", "é") -> ("", ""))
+    val got = UpbitWire.parseTrades(frames(cases.map { case ((a, c), _) => trade(a, c) }: _*),
+      "value", "UPBIT", lit(RecvMs)).collect().map(t => (t.askBid, t.change)).toSeq
+    assert(got == cases.map(_._2))
+  }
+
   test("a level side is kept only when both price and size are present (protobuf_mapper.py:186-199)") {
     val json =
       """{"type":"orderbook","code":"KRW-ETH","orderbook_units":[

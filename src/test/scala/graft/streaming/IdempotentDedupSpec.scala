@@ -115,4 +115,29 @@ class IdempotentDedupSpec extends SparkSpec {
         s"split $i (${batches.size} batches) diverged from the one-batch replay")
     }
   }
+
+  test("native dropDuplicatesWithinWatermark: engine-managed dedup state on the default store") {
+    // the built-in declarative variant: no user state code, default store
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val input = MemoryStream[SignalRow]
+    val q = IdempotentDedup.dedupStreamNative(input.toDS(), delay = "30 seconds")
+      .writeStream.format("memory").queryName("native_wm_dedup")
+      .outputMode("append").start()
+    try {
+      input.addData(Seq(
+        SignalRow("sig-a", "KRW-BTC", 1000L, 1.0),
+        SignalRow("sig-b", "KRW-BTC", 2000L, 2.0)))
+      q.processAllAvailable()
+      // same ids again, later event times, a later batch: dropped
+      input.addData(Seq(
+        SignalRow("sig-a", "KRW-BTC", 5000L, 9.0),
+        SignalRow("sig-c", "KRW-BTC", 6000L, 3.0)))
+      q.processAllAvailable()
+      val got = spark.table("native_wm_dedup").as[SignalRow]
+        .collect().map(r => (r.signal_id, r.ts_ms)).sorted.toSeq
+      assert(got == Seq(("sig-a", 1000L), ("sig-b", 2000L), ("sig-c", 6000L)),
+        "first arrival wins; within-delay duplicates never emit")
+    } finally q.stop()
+  }
 }

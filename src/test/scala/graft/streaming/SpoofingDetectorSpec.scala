@@ -50,6 +50,31 @@ class SpoofingDetectorSpec extends SparkSpec {
     assert(alerts.map(_.armed_at_ms) == Seq(t0)) // original arming time
   }
 
+  /** Generated Java source of one fresh resolution of the stored-state
+    * encoder's deserializer — what the stateful operator compiles after
+    * resolving the encoder again in each micro-batch. */
+  private def stateDeserializerSource(): String = {
+    import org.apache.spark.sql.catalyst.encoders.encoderFor
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+    val ctx = new CodegenContext
+    val ev = encoderFor(stateEncoder).resolveAndBind().objDeserializer.genCode(ctx)
+    ctx.declareMutableStates() + ctx.declareAddedFunctions() + ev.code.toString
+  }
+
+  test("stored state: every resolution of its encoder generates the same deserializer source") {
+    val first = stateDeserializerSource()
+    assert(first.nonEmpty)
+    assert(stateDeserializerSource() == first)
+  }
+
+  test("stored state round-trips the FSM state") {
+    val s = SpoofState(Map(99.0 -> ((50.0, t0 + 1500)), 3.5 -> ((7.0, t0 + 900))), Set(12.0, 1.0))
+    val stored = StoredState.of(s)
+    assert(stored.armed.length == 2 * 24 && stored.verified.length == 2 * 8)
+    assert(stored.toSpoofState == s)
+    assert(StoredState.of(Empty).toSpoofState == Empty)
+  }
+
   test("batch and streaming faces agree across micro-batches") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
