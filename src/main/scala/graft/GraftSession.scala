@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One place for engine session defaults so Verify, Bench, and tests
-  * agree on semantics.
+/** One place for engine session defaults so Verify, the benchmark and
+  * tests agree on semantics.
   *
   *  - UTC session time zone (oracle parity).
   *  - AQE on: runtime coalescing of shuffle partitions + skew-join

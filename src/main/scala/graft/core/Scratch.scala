@@ -18,16 +18,16 @@ import org.apache.spark.sql.Dataset
   *      them.
   *
   * The fix: query code registers every per-query persist here
-  * ([[persist]]), and the harness (Bench / Verify) calls [[release]]
-  * after consuming each query's result, so every timed pass computes
+  * ([[persist]]), and whoever runs the queries (`graft.Verify`,
+  * `perfbench`, the test harnesses) calls [[release]] after
+  * consuming each query's result, so every timed pass computes
   * its scratch from the parquet inputs and nothing leaks. Tracking is
   * thread-local: concurrent sessions (ConcurrencyHarness) release only
   * their own thread's scratch.
   *
-  * The SHARED prewarmed stores (shingle store, label stores, edge
-  * store, IVF artifacts, the LSH signature frame) deliberately do NOT
-  * go through here — they follow the long-standing build-once /
-  * invalidate-explicitly contract and are charged to prewarm_sec.
+  * The SHARED stores (shingle store, label stores, edge store, IVF
+  * artifacts) deliberately do NOT go through here: they outlive a
+  * query and live in the store cache, [[Memo]].
   */
 object Scratch {
   private val tracked = new ThreadLocal[scala.collection.mutable.ArrayBuffer[Dataset[_]]] {

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -82,6 +83,21 @@ case class PqDistArray(left: Expression, right: Expression)
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
   override def prettyName: String = "pq_dist_array"
   override def foldable: Boolean = false
+
+  /** The subspace is read once, as a constant: it must be a non-null
+    * integer literal naming one of the frozen sub-codebooks. */
+  override def checkInputDataTypes(): TypeCheckResult = super.checkInputDataTypes() match {
+    case TypeCheckResult.TypeCheckSuccess =>
+      val n = graft.operators.PqCodebooks.Nums.length
+      val ok = right.foldable && (right.eval() match {
+        case s: Int => s >= 0 && s < n
+        case _ => false
+      })
+      if (ok) TypeCheckResult.TypeCheckSuccess
+      else TypeCheckResult.TypeCheckFailure(
+        s"$prettyName: the subspace (second argument) must be a constant integer in [0, $n), got ${right.sql}")
+    case failure => failure
+  }
 
   private lazy val sub: Int = right.eval().asInstanceOf[Int]
   private lazy val cents: Array[Array[Double]] =

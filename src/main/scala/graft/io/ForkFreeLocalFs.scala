@@ -6,8 +6,8 @@ import java.nio.file.attribute.PosixFilePermission
 import java.util.{EnumSet => JEnumSet, Set => JSet}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults,
-  LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream, FileStatus, FsConstants,
+  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -30,9 +30,10 @@ import org.apache.hadoop.fs.permission.FsPermission
  *    `getFileStatus`, exactly what Hadoop builds once `readlink` prints
  *    nothing; links (and dangling links) take the inherited path.
  *
- * Checksums are untouched: the wrappers below are Hadoop's own
+ * Checksums are kept: the wrappers below are Hadoop's own
  * [[LocalFileSystem]] and [[ChecksumFs]], which still write `.crc`
- * sidecars and verify them wherever Hadoop's local filesystem does.
+ * sidecars and verify them wherever Hadoop's local filesystem does,
+ * and [[ForkFreeLocalFs]] also verifies the one-argument `open`.
  */
 class ForkFreeRawLocalFileSystem extends RawLocalFileSystem {
 
@@ -80,5 +81,12 @@ class ForkFreeRawLocalFs(uri: URI, conf: Configuration)
 
 /** `fs.AbstractFileSystem.file.impl`: Hadoop's [[ChecksumFs]] over
   * [[ForkFreeRawLocalFs]], as `LocalFs` is over `RawLocalFs`. This is
-  * what `FileContext` (streaming checkpoints, state stores) uses. */
-class ForkFreeLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new ForkFreeRawLocalFs(uri, conf))
+  * what `FileContext` (streaming checkpoints, state stores) uses.
+  *
+  * `FileContext.open(path)`, which Spark's checkpoint file manager
+  * calls, reaches the one-argument `open`; Hadoop's `FilterFs` sends
+  * that straight to the raw filesystem, skipping the checksum. Here it
+  * takes the verifying overload, so a corrupt log entry fails its read. */
+class ForkFreeLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new ForkFreeRawLocalFs(uri, conf)) {
+  override def open(f: Path): FSDataInputStream = open(f, getServerDefaults(f).getFileBufferSize)
+}

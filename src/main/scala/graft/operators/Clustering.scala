@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.Memo
 import graft.functions.Hashing
 import graft.sources.Tables
 
@@ -149,28 +150,20 @@ object Clustering {
     * the same warm-materialized-store stance as the persisted MinHash
     * signature store ([[Dedup.minhashLshPairsCore]]): in a real
     * pipeline cluster labels are written once and consumed by every
-    * downstream decision, not recomputed per report. */
-  private val labelCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Drop every memoized label frame (unpersisting its blocks). The
-    * memo has no data-change detection — callers that rewrite the
-    * parquet under a cached dir, and anything that calls
-    * `sqlContext.clearCache()` (which would strand the memo serving
-    * now-cold plans), must invalidate through here. Bench does. */
-  def invalidateLabelCache(): Unit = {
-    labelCache.values.foreach(_.unpersist())
-    labelCache.clear()
-  }
-
+    * downstream decision, not recomputed per report. Cached by
+    * [[graft.core.Memo]], like every store. */
   def dupLabels(spark: SparkSession, dir: String): DataFrame =
-    graft.core.Memo.once(labelCache, (spark, dir))({
+    Memo.once(spark, dir, "Clustering.dupLabels", (_: DataFrame).unpersist())({
       val pairs = Dedup.minhashLshPairsCore(spark, dir)
         .select($"doc_a".as("a"), $"doc_b".as("b"))
       val l = connectedComponents(pairs) // returned frame is persisted
       l.count() // eager, so every consumer reads the materialized store
       l
     })
+
+  /** Releases every cached store; perfbench/src/graftbench/Main.scala
+    * calls it. */
+  def invalidateLabelCache(): Unit = Memo.clear()
 
   // ------------------------------------------------------------------
   // Gate query: cluster the LSH near-dup pairs, emit (doc_id,
@@ -371,11 +364,11 @@ object Clustering {
     val (merged, release) = mergeEdgesIntoLabelsReleasable(edges, corpusLabels)
     // The unmanaged face can't know when the caller's last action over
     // the merged frame runs, so the closure blocks backing it are
-    // registered for deferred release instead of leaking: every cache
-    // invalidation point (Bench post-warmup, PlanSpec executedCold,
-    // ScalingHarness.resetCaches, invalidateIncrementalStore) drains
-    // the registry. Long-running streams use the releasable face
-    // (LabelMaintenance.absorb releases per batch).
+    // registered for deferred release instead of leaking: releasing
+    // the incremental store (a [[graft.core.Memo]] rebuild or clear)
+    // and the harnesses' resets drain the registry. Long-running
+    // streams use the releasable face (LabelMaintenance.absorb
+    // releases per batch).
     pendingMergeClosures.add(release)
     merged
   }
@@ -400,8 +393,8 @@ object Clustering {
   }
 
   /** Deferred release handles from the unmanaged merge face — drained
-    * at every cache-invalidation point so the closure blocks behind
-    * already-consumed merge results don't accumulate. */
+    * whenever the incremental store is released, so the closure blocks
+    * behind already-consumed merge results don't accumulate. */
   private val pendingMergeClosures =
     new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
 
@@ -462,19 +455,17 @@ object Clustering {
 
   /** Persisted pre-batch state for the gate: the corpus-split signature
     * store and its from-scratch label store — what a production
-    * pipeline holds between batches. Memoized per (session, dir) and
-    * prewarmed by Bench so the gate query pays the MERGE, not the
-    * store build (the [[dupLabels]] accounting stance). `base` is the
-    * persisted signature store (held for unpersist); batchSig/corpusSig
-    * are its two deterministic splits. */
+    * pipeline holds between batches, cached by [[graft.core.Memo]]
+    * (the [[dupLabels]] stance). `base` is the persisted signature
+    * store (held for unpersist); batchSig/corpusSig are its two
+    * deterministic splits. */
   final case class IncStore(base: DataFrame, batchSig: DataFrame,
       corpusSig: DataFrame, corpusLabels: DataFrame)
 
-  private val incStoreCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), IncStore]
-
   def incrementalStore(spark: SparkSession, dir: String): IncStore =
-    graft.core.Memo.once(incStoreCache, (spark, dir))({
+    Memo.once(spark, dir, "Clustering.incrementalStore", (s: IncStore) => {
+      s.base.unpersist(); s.corpusLabels.unpersist(); releaseMergeClosures()
+    })({
       val base = Dedup.signatureFrame(Tables.documentsSharded(spark, dir)
           .select($"doc_id", $"text"))
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -490,11 +481,9 @@ object Clustering {
       IncStore(base, batchSig, corpusSig, corpusLabels)
     })
 
-  def invalidateIncrementalStore(): Unit = {
-    incStoreCache.values.foreach { s => s.base.unpersist(); s.corpusLabels.unpersist() }
-    incStoreCache.clear()
-    releaseMergeClosures()
-  }
+  /** Releases every cached store; perfbench/src/graftbench/Main.scala
+    * calls it. */
+  def invalidateIncrementalStore(): Unit = Memo.clear()
 
   // ------------------------------------------------------------------
   // Gate query: merge the deterministic incoming batch
@@ -768,14 +757,10 @@ object Clustering {
   /** Persisted (vec_id, v, vv) trainer frame, computed once per
     * (session, dir) and memoized — every Lloyd round AND the gate's
     * final E-step scan this store instead of re-deriving the
-    * double-cast + self-dot from parquet (the
-    * [[Corpus.sideCountStore]] memoize/invalidate contract; Bench
-    * prewarms it so per-query timings are order-independent). */
-  private val vecCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
+    * double-cast + self-dot from parquet. Cached by
+    * [[graft.core.Memo]]. */
   def vecStore(spark: SparkSession, dir: String): DataFrame =
-    graft.core.Memo.once(vecCache, (spark, dir))({
+    Memo.once(spark, dir, "Clustering.vecStore", (_: DataFrame).unpersist())({
       // Distributed shape assertion at store-build time: every consumer
       // (Lloyd rounds, the gate E-step, ANN) assumes fixed-length
       // non-null vectors — the kmeans column-sums read-back in
@@ -795,13 +780,9 @@ object Clustering {
       v
     })
 
-  /** Drop the memoized trainer frames (same contract as
-    * [[invalidateLabelCache]] — no data-change detection, so cache
-    * clears and parquet rewrites must come through here). */
-  def invalidateVecCache(): Unit = {
-    vecCache.values.foreach(_.unpersist())
-    vecCache.clear()
-  }
+  /** Releases every cached store; perfbench/src/graftbench/Main.scala
+    * calls it. */
+  def invalidateVecCache(): Unit = Memo.clear()
 
   /** Run `rounds` Lloyd iterations; returns the trained centroids as
     * (cell, centroid) rows read back from the final update. */

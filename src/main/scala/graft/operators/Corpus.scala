@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.core.Memo
 import graft.functions.Hashing
 import graft.sources.Tables
 
@@ -514,13 +515,6 @@ object Corpus {
   val EvalRem = 7L
   val ContamThreshold = 0.3
 
-  /** Per-document contamination frame (unordered), computed once per
-    * session and memoized — the sha-heavy shingle pass is shared by
-    * the decontamination gate query and [[qCorpusVerdict]], the same
-    * warm-materialized-store stance as [[Clustering.dupLabels]]. */
-  private val contamCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   /** Ordered shingle store: one row per corpus document carrying its
     * FULL ordered (duplicates kept) shingle-string array, computed
     * once per session, persisted and shared. The tokenize+shingle
@@ -529,13 +523,10 @@ object Corpus {
     * [[decontaminateCore]] had already scanned. Both now read this
     * store: the distinct-set math of decontamination is an
     * `array_distinct` projection, the positional probe a
-    * `posexplode`. Same memoize/invalidate contract as the
+    * `posexplode`. Cached by [[graft.core.Memo]], like the
     * contamination frame below. */
-  private val shingleCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   def shingleStore(spark: SparkSession, dir: String): DataFrame =
-    graft.core.Memo.once(shingleCache, (spark, dir))({
+    Memo.once(spark, dir, "Corpus.shingleStore", (_: DataFrame).unpersist())({
       val store = Tables.documentsSharded(spark, dir)
         .select($"doc_id",
           Hashing.wordShingles(Hashing.tokens($"text"), Dedup.ShingleN).as("sh"))
@@ -544,29 +535,21 @@ object Corpus {
       store
     })
 
-  /** Drop every memoized contamination frame AND the shared shingle
-    * store (unpersisting their blocks) — same contract as
-    * [[Clustering.invalidateLabelCache]]: required after rewriting
-    * data under a cached dir or calling `sqlContext.clearCache()`.
-    * Bench does. */
-  def invalidateContamCache(): Unit = {
-    contamCache.values.foreach(_.unpersist())
-    contamCache.clear()
-    shingleCache.values.foreach(_.unpersist())
-    shingleCache.clear()
-    srcShingleCache.values.foreach(_.unpersist())
-    srcShingleCache.clear()
-    sideCountCache.values.foreach(_.unpersist())
-    sideCountCache.clear()
-  }
+  /** Releases every cached store; perfbench/src/graftbench/Main.scala
+    * calls it. */
+  def invalidateContamCache(): Unit = Memo.clear()
 
   // The Spark side joins on the raw shingle STRINGS from the shared
   // store — the output exposes only counts/ratios, so no h60 is ever
   // needed here (the oracle's list_transform to h60 is
   // length-preserving, so distinct/intersect counts agree; sha256 per
   // distinct shingle is paid by neither engine's Spark twin anymore).
+  /** Per-document contamination frame (unordered), computed once per
+    * input and cached — the sha-heavy shingle pass is shared by
+    * the decontamination gate query and [[qCorpusVerdict]], the same
+    * warm-materialized-store stance as [[Clustering.dupLabels]]. */
   def decontaminateCore(spark: SparkSession, dir: String): DataFrame =
-    graft.core.Memo.once(contamCache, (spark, dir))({
+    Memo.once(spark, dir, "Corpus.decontaminateCore", (_: DataFrame).unpersist())({
       val docs = shingleStore(spark, dir)
         .select($"doc_id", array_distinct($"sh").as("sh"))
       val evalIndex = docs.filter($"doc_id" % EvalMod === EvalRem)
@@ -1109,14 +1092,11 @@ object Corpus {
 
   /** Per-side token-count store: the vocab-slim (w, ca, cb) frame both
     * the top-k and the scalar TV total read. Persisted so the corpus
-    * tokenize scan happens once per session (same memoize/invalidate
-    * contract as [[shingleStore]]); every downstream consumer is
-    * vocab-sized or smaller. */
-  private val sideCountCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
+    * tokenize scan happens once per input (cached by
+    * [[graft.core.Memo]]); every downstream consumer is vocab-sized or
+    * smaller. */
   def sideCountStore(spark: SparkSession, dir: String): DataFrame =
-    graft.core.Memo.once(sideCountCache, (spark, dir))({
+    Memo.once(spark, dir, "Corpus.sideCountStore", (_: DataFrame).unpersist())({
       val store = Tables.documentsSharded(spark, dir)
         .select(pmod(Hashing.h60($"source"), lit(2)).as("side"),
           explode(Hashing.tokens($"text")).as("w"))
@@ -1178,14 +1158,10 @@ object Corpus {
   // cross-engine. (For an UNBOUNDED source universe the sketch form
   // X64 applies; this exact face is for the catalog-sized case.)
   // ------------------------------------------------------------------
-  private val srcShingleCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   /** Distinct (source, h) shingle-hash incidence, persisted — shares
-    * the shingle store's parse; invalidated with the other Corpus
-    * memos. */
+    * the shingle store's parse. */
   def sourceShingleStore(spark: SparkSession, dir: String): DataFrame =
-    graft.core.Memo.once(srcShingleCache, (spark, dir))({
+    Memo.once(spark, dir, "Corpus.sourceShingleStore", (_: DataFrame).unpersist())({
       val src = Tables.documents(spark, dir).select($"doc_id", $"source")
       val store = shingleStore(spark, dir)
         .join(src, Seq("doc_id"))

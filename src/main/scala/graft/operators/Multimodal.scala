@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.Memo
 import graft.functions.Hashing
 import graft.sources.Tables
 
@@ -486,16 +487,15 @@ object Multimodal {
   // the [[Clustering.connectedComponents]] loop (diameter-bounded slim
   // (long, long) shuffles); the verdict join is doc-keyed.
   // ------------------------------------------------------------------
-  /** Memoized (tagged evidence edges, component labels) per
-    * (session, dir) — the [[Clustering.dupLabels]] warm-store stance:
-    * in a deployed pipeline the cross-modal evidence and its closure
-    * are written once per corpus snapshot and every verdict consumer
-    * reads them; Bench prewarms this store like the others. */
-  private val modalCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-
+  /** (tagged evidence edges, component labels), cached by
+    * [[graft.core.Memo]] — the [[Clustering.dupLabels]] warm-store
+    * stance: in a deployed pipeline the cross-modal evidence and its
+    * closure are written once per corpus snapshot and every verdict
+    * consumer reads them. */
   def modalEvidence(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    graft.core.Memo.once(modalCache, (spark, dir))({
+    Memo.once(spark, dir, "Multimodal.modalEvidence", (s: (DataFrame, DataFrame)) => {
+      s._1.unpersist(); s._2.unpersist()
+    })({
       val tagged = Dedup.minhashLshPairsCore(spark, dir)
         .select($"doc_a", $"doc_b", lit("text").as("m"))
         .unionByName(imageNeardupCore(spark, dir)
@@ -517,13 +517,6 @@ object Multimodal {
       labels.count()
       (tagged, labels)
     })
-
-  /** Drop the memoized evidence/label frames (no data-change
-    * detection — the [[Clustering.invalidateLabelCache]] contract). */
-  def invalidateModalCache(): Unit = {
-    modalCache.values.foreach { case (t, l) => t.unpersist(); l.unpersist() }
-    modalCache.clear()
-  }
 
   def qModalDedup(spark: SparkSession, dir: String): DataFrame = {
     val (tagged, labels) = modalEvidence(spark, dir)
@@ -657,22 +650,21 @@ object Multimodal {
   /** Persisted pre-batch modal state: the phash store, the distinct
     * frame postings, the tagged corpus-within pair families, and their
     * closure — what a production multimodal pipeline holds between
-    * batches (the [[Clustering.incrementalStore]] stance; Bench
-    * prewarms it so the gate pays the merge, not the store build).
+    * batches (the [[Clustering.incrementalStore]] stance).
     * Text/image corpus pairs reuse the already-warm full-pair stores
     * filtered to corpus endpoints (exact, by pairwise decomposition);
     * video corpus pairs are recomputed with corpus-only rarity. */
   final case class IncModalStore(ph: DataFrame, fr: DataFrame,
       aph: DataFrame, corpusTagged: DataFrame, corpusLabels: DataFrame)
 
-  private val incModalCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), IncModalStore]
-
   private def isIncoming(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     c % Dedup.IncomingMod === lit(Dedup.IncomingRem)
 
   def incModalStore(spark: SparkSession, dir: String): IncModalStore =
-    graft.core.Memo.once(incModalCache, (spark, dir))({
+    Memo.once(spark, dir, "Multimodal.incModalStore", (s: IncModalStore) => {
+      s.ph.unpersist(); s.fr.unpersist(); s.aph.unpersist()
+      s.corpusTagged.unpersist(); s.corpusLabels.unpersist()
+    })({
       val ph = phashFrame(payloadTable(spark, dir)).persist()
       ph.count()
       val fr = framePhashes(spark, dir).select($"doc_id", $"fhash").distinct()
@@ -747,14 +739,6 @@ object Multimodal {
           st.corpusLabels.filter($"id" =!= docId), label, survivorPairs)
       }
     IncModalStore(ph2, fr2, aph2, tagged2, labels2)
-  }
-
-  def invalidateIncModalStore(): Unit = {
-    incModalCache.values.foreach { s =>
-      s.ph.unpersist(); s.fr.unpersist(); s.aph.unpersist()
-      s.corpusTagged.unpersist(); s.corpusLabels.unpersist()
-    }
-    incModalCache.clear()
   }
 
   // ------------------------------------------------------------------

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.core.Memo
+
 /**
  * Skew and co-location utilities — the remaining 100 TB levers beyond
  * AQE (which GraftSession enables): explicit salting for aggregations
@@ -434,16 +436,13 @@ object Scale {
   //    each task emits ONE bucket file instead of N (the many-small-
   //    files failure mode of naive bucketed writes);
   //  - `sortBy(key)` within buckets lets the SMJ skip its sort.
-  // The twin tables are built once per (session, dir) and memoized
-  // (Bench prewarms them; the warehouse write is the one-time cost a
+  // The twin tables are built once per input and cached by
+  // [[graft.core.Memo]] (the warehouse write is the one-time cost a
   // deployed pipeline pays at ingest). The ORACLE reads the ORIGINAL
   // parquet — agreement also pins that the bucketed twin's content is
   // a faithful copy of the source.
   // ------------------------------------------------------------------
   val NumBuckets = 16
-
-  private val bucketCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), (String, String)]
 
   /** Drop a stale twin: the catalog entry if this session has one, AND
     * the warehouse directory a PREVIOUS JVM may have left behind — a
@@ -462,7 +461,7 @@ object Scale {
     * (lineitem, orders) catalog names. */
   def bucketedTables(spark: org.apache.spark.sql.SparkSession,
       dir: String): (String, String) =
-    graft.core.Memo.once(bucketCache, (spark, dir))({
+    Memo.once[(String, String)](spark, dir, "Scale.bucketedTables")({
       import graft.sources.Tables
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val li = s"g_bkt_lineitem$tag"
@@ -507,13 +506,6 @@ object Scale {
     }
   }
 
-  /** Drop the bucketed-table memos (files stay in the warehouse; a
-    * rebuild overwrites them). Same contract as the FrameStore
-    * invalidators: Bench and ScalingHarness reset through here. */
-  def invalidateBucketed(): Unit = {
-    bucketCache.clear(); bucketIncCache.clear(); bucketCompactCache.clear()
-  }
-
   /** Gate: order-priority revenue rollup over the co-located join.
     * The join itself plans with zero exchanges (PlanSpec pin); the
     * only shuffle left is the 5-group priority aggregate. */
@@ -544,13 +536,10 @@ object Scale {
   // (a misbucketed append would still pass a content diff, but the
   // co-location plan pin would catch it).
   // ------------------------------------------------------------------
-  private val bucketIncCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), (String, String)]
-
   /** Base-slice twins + appended increment; returns catalog names. */
   def bucketedAppendTables(spark: org.apache.spark.sql.SparkSession,
       dir: String): (String, String) =
-    graft.core.Memo.once(bucketIncCache, (spark, dir))({
+    Memo.once[(String, String)](spark, dir, "Scale.bucketedAppendTables")({
       import graft.sources.Tables
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val li = s"g_bki_lineitem$tag"
@@ -631,14 +620,11 @@ object Scale {
   // nightly maintenance job that keeps an append-heavy bucketed store
   // from degrading into a small-files swamp.
   // ------------------------------------------------------------------
-  private val bucketCompactCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), String]
-
   /** Base + 2 appends + compaction on a lineitem twin; returns its
     * catalog name. */
   def bucketedCompactTable(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    graft.core.Memo.once(bucketCompactCache, (spark, dir))({
+    Memo.once[String](spark, dir, "Scale.bucketedCompactTable")({
       import graft.sources.Tables
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val li = s"g_bkc_lineitem$tag"
@@ -687,9 +673,9 @@ object Scale {
   // streaming ingest face in [[graft.streaming.DayRouter]] (the same
   // idempotent PartitionedAppend the shard router rides).
   //
-  // The store is written once per (session, dir) and memoized — the
-  // ingest-layout cost a deployed pipeline pays when events land, not
-  // per query (Bench prewarms it with the other stores). The ORACLE
+  // The store is written once per input and cached by
+  // [[graft.core.Memo]] — the ingest-layout cost a deployed pipeline
+  // pays when events land, not per query. The ORACLE
   // reads the ORIGINAL unpartitioned parquet with the equivalent
   // epoch-day predicate — agreement proves the partitioned round-trip
   // lost nothing inside the range AND the day derivation matches.
@@ -697,18 +683,10 @@ object Scale {
   val PruneDayLo = 19730L // 2024-01-08
   val PruneDayHi = 19736L // 2024-01-14
 
-  private val dayStoreCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), String]
-
-  def invalidateDayStore(): Unit = {
-    dayStoreCache.clear(); dayRetCache.clear(); dayLifeCache.clear()
-    dayEvoCache.clear()
-  }
-
   /** Build (once) the day-partitioned event store; returns its path. */
   def dayPartitionedEvents(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    graft.core.Memo.once(dayStoreCache, (spark, dir))({
+    Memo.once[String](spark, dir, "Scale.dayPartitionedEvents")({
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val path = s"target/day_events$tag"
       graft.sources.Tables.events(spark, dir)
@@ -769,14 +747,11 @@ object Scale {
       .map { d => fs.delete(d, true); 1L }.sum
   }
 
-  private val dayRetCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), String]
-
   /** Retention twin: the day-partitioned store with days below the
-    * cutoff expired. Memoized; invalidated with the day store. */
+    * cutoff expired. Memoized like the day store. */
   def retentionStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    graft.core.Memo.once(dayRetCache, (spark, dir))({
+    Memo.once[String](spark, dir, "Scale.retentionStore")({
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val path = s"target/day_events_ret$tag"
       graft.sources.Tables.events(spark, dir)
@@ -863,14 +838,11 @@ object Scale {
     ()
   }
 
-  private val dayLifeCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), String]
-
   /** Lifecycle twin: 3 corrupted appends → backfill the bad day →
-    * compact. Memoized; invalidated with the day store. */
+    * compact. Memoized like the day store. */
   def dayLifecycleStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    graft.core.Memo.once(dayLifeCache, (spark, dir))({
+    Memo.once[String](spark, dir, "Scale.dayLifecycleStore")({
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val path = s"target/day_events_life$tag"
       val p = new org.apache.hadoop.fs.Path(path)
@@ -929,13 +901,10 @@ object Scale {
   // ------------------------------------------------------------------
   val EvolveDay = 19738L // producer starts emitting `source` 2024-01-16
 
-  private val dayEvoCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), String]
-
   /** Two-generation twin: v1 partitions without `source`, v2 with. */
   def evolvedStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    graft.core.Memo.once(dayEvoCache, (spark, dir))({
+    Memo.once[String](spark, dir, "Scale.evolvedStore")({
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val path = s"target/day_events_evo$tag"
       val p = new org.apache.hadoop.fs.Path(path)
@@ -991,16 +960,11 @@ object Scale {
   // throw on this store, so the posture is proven necessary, not
   // assumed.
   // ------------------------------------------------------------------
-  private val dayWidenCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), String]
-
-  def invalidateWidenStore(): Unit = dayWidenCache.clear()
-
   /** Build (once) the widening twin of the day store: `cents` written
     * INT32 before the boundary, INT64 from it on. */
   def widenedStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    graft.core.Memo.once(dayWidenCache, (spark, dir))({
+    Memo.once[String](spark, dir, "Scale.widenedStore")({
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val path = s"target/day_events_widen$tag"
       val p = new org.apache.hadoop.fs.Path(path)
@@ -1089,11 +1053,6 @@ object Scale {
   // ------------------------------------------------------------------
   val ZStoreFiles = 32L
 
-  private val zStoreCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), String]
-
-  def invalidateZorderStore(): Unit = zStoreCache.clear()
-
   /** Per-file (min, max) of `cols`, read from the REAL parquet footers
     * (block-level column statistics) — driver-side O(files) metadata
     * work, the manifest build a table format performs at commit. */
@@ -1130,7 +1089,7 @@ object Scale {
     * dim bounds the box predicate derives from. Returns the base. */
   def zorderStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    graft.core.Memo.once(zStoreCache, (spark, dir))({
+    Memo.once[String](spark, dir, "Scale.zorderStore")({
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val base = s"target/zorder_store$tag"
       val e = graft.sources.Tables.events(spark, dir)
@@ -1237,11 +1196,6 @@ object Scale {
   val BloomPruneK = 3
   val BloomPruneBits = 65536L
 
-  private val bloomStoreCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), String]
-
-  def invalidateBloomStore(): Unit = bloomStoreCache.clear()
-
   /** The k sha-derived bit positions of an id (X63's position rule). */
   private def bloomPositions(id: Column): Column =
     array((0 until BloomPruneK).map(j =>
@@ -1265,7 +1219,7 @@ object Scale {
     * global id range the gate's probe set derives from. */
   def bloomStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    graft.core.Memo.once(bloomStoreCache, (spark, dir))({
+    Memo.once[String](spark, dir, "Scale.bloomStore")({
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val base = s"target/bloom_store$tag"
       val e = graft.sources.Tables.events(spark, dir)
@@ -1355,17 +1309,12 @@ object Scale {
   // cannot tell an incrementally-maintained store from a rebuilt one,
   // which is exactly what the shared-oracle gate proves.
   // ------------------------------------------------------------------
-  private val bloomIncCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), String]
-
-  def invalidateBloomIncStore(): Unit = bloomIncCache.clear()
-
   /** Build (once) the incrementally-maintained store: the first 24
     * days as the base build, the remaining days appended as a batch
     * through the new-files + manifest-append path. */
   def bloomIncStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    graft.core.Memo.once(bloomIncCache, (spark, dir))({
+    Memo.once[String](spark, dir, "Scale.bloomIncStore")({
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val base = s"target/bloom_inc_store$tag"
       val conf = spark.sparkContext.hadoopConfiguration
@@ -1505,11 +1454,6 @@ object Scale {
   // day-derived oracle replay — the manifests, not the directory
   // tree, define every result.
   // ------------------------------------------------------------------
-  private val ttStoreCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), String]
-
-  def invalidateTimeTravelStore(): Unit = ttStoreCache.clear()
-
   private def ttListFiles(spark: org.apache.spark.sql.SparkSession,
       base: String, sub: String): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(s"$base/$sub")
@@ -1530,7 +1474,7 @@ object Scale {
     * files stay). Returns the base path. */
   def timeTravelStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    graft.core.Memo.once(ttStoreCache, (spark, dir))({
+    Memo.once[String](spark, dir, "Scale.timeTravelStore")({
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val base = s"target/tt_store$tag"
       val basePath = new org.apache.hadoop.fs.Path(base)
@@ -1698,11 +1642,6 @@ object Scale {
   // ------------------------------------------------------------------
   val UpsertShards = 16
 
-  private val upsertStoreCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), String]
-
-  def invalidateUpsertStore(): Unit = upsertStoreCache.clear()
-
   /** Apply a CDC batch to the keyed store at `base`: rows of
     * `deletes` (k) and `upserts` (k, prio, cents) — update if the key
     * exists, insert otherwise. Only shards carrying batch keys are
@@ -1783,7 +1722,7 @@ object Scale {
     * applied through [[mergeUpsert]]. */
   def upsertStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    graft.core.Memo.once(upsertStoreCache, (spark, dir))({
+    Memo.once[String](spark, dir, "Scale.upsertStore")({
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val base = s"target/upsert_store$tag"
       val basePath = new org.apache.hadoop.fs.Path(base)

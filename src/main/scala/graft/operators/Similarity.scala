@@ -3,10 +3,11 @@ package graft.operators
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Scratch
+import graft.core.{Memo, Scratch}
 import graft.sources.Tables
 
 /**
@@ -907,8 +908,10 @@ object Similarity {
     // the oracle); only the ≤1584-row greedy argmax moves to the
     // driver as ONE bounded model read (the kmeans read-back stance,
     // NOT a collect over corpus data), with the identical IEEE
-    // arithmetic (max-sim penalty, 0.7/0.3 λ-blend, ties to the
-    // smallest doc id) — same picks, same doubles, same hash.
+    // arithmetic (max-sim penalty, 0.7/0.3 λ-blend) and the SQL order
+    // of `score DESC, doc_id`: NaN above every number and equal to
+    // NaN, ties to the smallest doc id — same picks, same doubles,
+    // same hash.
     val slRows = shortlist.select($"query_id", $"doc_id", $"rel").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val prRows = shortlist.as("x").join(shortlist.as("y"),
@@ -944,8 +947,8 @@ object Similarity {
                 }
               }
             val score = 0.7 * rel - 0.3 * (if (any) pen else 0.0)
-            if (first || score > bestScore ||
-                (score == bestScore && d < bestId)) {
+            val order = SQLOrderingUtil.compareDoubles(score, bestScore)
+            if (first || order > 0 || (order == 0 && d < bestId)) {
               bestId = d; bestRel = rel; bestScore = score; first = false
             }
           }
@@ -1308,17 +1311,6 @@ object Similarity {
   // gated against the SAME DuckDB oracle as the in-memory X9 path:
   // agreement proves the round-trip through parquet loses nothing.
   // ------------------------------------------------------------------
-  private val ivfArtifactCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-  private val ivfIncCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-  private val ivfRetractCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, Long)]
-
-  def invalidateIvfArtifact(): Unit = {
-    ivfArtifactCache.clear(); ivfIncCache.clear(); ivfRetractCache.clear()
-  }
-
   /** The frozen centroid frame (cent_id, cv, ncv) — broadcast-sized,
     * shared by the corpus builders and the streaming ingest assign. */
   private def centroidFrame(spark: SparkSession): DataFrame = {
@@ -1387,7 +1379,7 @@ object Similarity {
 
   /** Build and persist the IVF artifacts; returns the base path. */
   def ivfArtifact(spark: SparkSession, dir: String): String =
-    graft.core.Memo.once(ivfArtifactCache, (spark, dir))({
+    Memo.once[String](spark, dir, "Similarity.ivfArtifact")({
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val base = s"target/ivf_artifact$tag"
       val ranked = rankedAssign(spark, dir).persist()
@@ -1443,7 +1435,7 @@ object Similarity {
   // increment ≡ rebuild: nothing lost, duplicated, or mis-celled.
   // ------------------------------------------------------------------
   def ivfArtifactInc(spark: SparkSession, dir: String): String =
-    graft.core.Memo.once(ivfIncCache, (spark, dir))({
+    Memo.once[String](spark, dir, "Similarity.ivfArtifactInc")({
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val base = s"target/ivf_artifact_inc$tag"
       val ranked = rankedAssign(spark, dir).persist()
@@ -1508,7 +1500,7 @@ object Similarity {
   /** Build a retraction twin: full artifact, then retract the rank-1
     * neighbor of the smallest query. Returns (base, retracted id). */
   def ivfArtifactRetract(spark: SparkSession, dir: String): (String, Long) =
-    graft.core.Memo.once(ivfRetractCache, (spark, dir))({
+    Memo.once[(String, Long)](spark, dir, "Similarity.ivfArtifactRetract")({
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val base = s"target/ivf_artifact_ret$tag"
       val ranked = rankedAssign(spark, dir).persist()

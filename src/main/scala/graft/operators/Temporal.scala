@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
+import graft.core.Memo
 import graft.sources.Tables
 
 /**
@@ -437,11 +438,6 @@ object Temporal {
   val Scd2Shards = 16
   val Scd2TailDays = 30L
 
-  private val scd2StoreCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
-  def invalidateScd2Store(): Unit = scd2StoreCache.clear()
-
   /** The qScd2 construction over an arbitrary change-log frame of
     * (o_custkey, o_orderkey, d_ms, prio) — X131 factored so the store
     * build, the spec's synthetic logs and the gate share it. */
@@ -600,7 +596,7 @@ object Temporal {
     * EXCEPT the last [[Scd2TailDays]] days, then that tail applied as
     * one incremental change batch. */
   def scd2Store(spark: SparkSession, dir: String): String =
-    graft.core.Memo.once(scd2StoreCache, (spark, dir))({
+    Memo.once[String](spark, dir, "Temporal.scd2Store")({
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val base = s"target/scd2_store$tag"
       val log = ordersLog(spark, dir)

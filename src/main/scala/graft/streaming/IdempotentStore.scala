@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.io.{FileNotFoundException, IOException}
+import java.io.IOException
 import java.util.UUID
 
 import scala.collection.concurrent.TrieMap
@@ -17,24 +17,7 @@ import org.apache.spark.sql.catalyst.expressions.{InterpretedOrdering, RowOrderi
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** The data entries of a store directory, as Spark's file index sees
-  * them: names prefixed `_` or `.` (`_SUCCESS`, `_temporary/` left by a
-  * crashed write, `_staging-*`, checksum files) are not data. Shared by
-  * every idempotent sink, so "has the store data?" has one answer. */
-private[streaming] object StoreListing {
-
-  /** Data entries of `dir`; empty when the directory does not exist. */
-  def list(fs: FileSystem, dir: Path): Seq[FileStatus] =
-    try fs.listStatus(dir).toSeq.filter { s =>
-      val name = s.getPath.getName
-      !name.startsWith("_") && !name.startsWith(".")
-    } catch { case _: FileNotFoundException => Nil }
-
-  def hasData(spark: SparkSession, path: String): Boolean = {
-    val dir = new Path(path)
-    list(dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir).nonEmpty
-  }
-}
+import graft.io.StoreListing
 
 /**
  * K3 engine: [[Streams.idempotentAppend]] as an O(batch) commit.

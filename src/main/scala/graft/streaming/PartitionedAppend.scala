@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.io.StoreListing
+
 /**
  * The one idempotent partitioned-append primitive both ingestion
  * routers ride (shard-partitioned [[ShardRouter]], day-partitioned

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Memo
 import graft.operators.UpbitWire
 import graft.sources.Tables
 
@@ -32,23 +33,19 @@ import graft.sources.Tables
 object WireIngest {
   import graft.operators.Relational.ColInterp
 
-  /** Session-scoped store dirs: the idempotent store must be the SAME
-    * path when the query re-runs in one session (warm + timed bench
-    * passes) — the second append is then provably a no-op — and a
-    * FRESH path per JVM so stale stores from older code never leak in. */
-  private val storeDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
-  // The stores are session-scoped scratch under java.io.tmpdir; a
-  // long-lived service re-creating sessions would otherwise leak one
-  // directory per (session, dir) pair per JVM forever.
-  sys.addShutdownHook {
-    storeDirs.values.foreach(deleteRecursively)
-    storeDirs.clear()
+  /** The idempotent store for one (session, input): the SAME path
+    * while the query re-runs on unchanged input (warm + timed passes),
+    * so the second append is provably a no-op, and a new path once the
+    * input changes ([[Memo]]). Stores live under one scratch root per
+    * JVM, deleted at shutdown, so stale stores from older code never
+    * leak in and a long-lived service leaves no directories behind. */
+  private lazy val storeRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_wire_store")
+    sys.addShutdownHook(deleteRecursively(root))
+    root
   }
 
-  private def deleteRecursively(dir: String): Unit = {
-    val root = java.nio.file.Paths.get(dir)
+  private def deleteRecursively(root: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(root)) {
       val all = java.nio.file.Files.walk(root)
       try
@@ -56,7 +53,6 @@ object WireIngest {
           .forEach(p => java.nio.file.Files.deleteIfExists(p))
       finally all.close()
     }
-  }
 
   /** The deterministic events→frames synthesis (one JSON frame per
     * event, doubled for at-least-once delivery). `to_json` drops null
@@ -92,8 +88,8 @@ object WireIngest {
   }
 
   def qWireIngest(spark: SparkSession, dir: String): DataFrame = {
-    val store = graft.core.Memo.once(storeDirs, (spark, dir))(
-      java.nio.file.Files.createTempDirectory("graft_wire_store").toString)
+    val store = Memo.once[String](spark, dir, "WireIngest.store")(
+      java.nio.file.Files.createTempDirectory(storeRoot, "store").toString)
     val trades = UpbitWire.parseTrades(
       frames(spark, dir), "frame", "Upbit", $"ts_ms" + 5)
     val decoded = Streams.tradesFromProtoRecords(

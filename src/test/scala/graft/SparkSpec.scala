@@ -5,7 +5,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM, forked by sbt).
-  * Same config seam as Verify/Bench so tests exercise prod semantics. */
+  * Same config seam as Verify so tests exercise prod semantics. */
 object SparkSpec {
   lazy val spark: SparkSession = {
     val s = GraftSession.builder("local[4]", 8).getOrCreate()

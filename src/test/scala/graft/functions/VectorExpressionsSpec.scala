@@ -125,4 +125,19 @@ class VectorExpressionsSpec extends SparkSpec {
     val cells = graft.operators.PqCodebooks.Nums(2).length
     assert(row.getSeq[Double](0).length == cells)
   }
+
+  // The subspace is read once as a constant, so anything else must fail
+  // when the query is analyzed, naming the function and the valid range.
+  private val subspaces = graft.operators.PqCodebooks.Nums.length
+  Seq(
+    "a column" -> "CAST(id AS INT)",
+    "a negative value" -> "-1",
+    "an out-of-range value" -> subspaces.toString).foreach { case (what, arg) =>
+    test(s"pq_dist_array rejects $what as its subspace at analysis time") {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(s"SELECT pq_dist_array(array_repeat(0.0d, 64), $arg) AS d FROM range(3)"))
+      assert(e.getMessage.contains(s"pq_dist_array: the subspace (second argument) must be a constant integer in [0, $subspaces)"),
+        e.getMessage)
+    }
+  }
 }

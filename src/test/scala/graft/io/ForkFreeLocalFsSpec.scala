@@ -201,4 +201,34 @@ class ForkFreeLocalFsSpec extends SparkSpec {
       intercept[ChecksumException](read(p))
     }
   }
+
+  test("a restart from a checkpoint with a corrupt offset-log entry fails the checksum") {
+    // Spark reads checkpoint logs with FileContext.open(path), the
+    // one-argument overload
+    val dir = tmpDir("ff-offsets")
+    val in = dir.resolve("in")
+    Files.createDirectories(in)
+    Files.write(in.resolve("0.json"), (1 to 5).map(i => s"""{"id":$i}""").mkString("\n").getBytes(UTF_8))
+    val checkpoint = dir.resolve("checkpoint")
+    def run(): Unit = {
+      val q = spark.readStream.schema("id LONG").json(in.toString)
+        .writeStream.format("parquet").option("path", dir.resolve("out").toString)
+        .option("checkpointLocation", checkpoint.toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally q.stop()
+    }
+    run()
+    val entry = checkpoint.resolve("offsets").resolve("0")
+    assert(Files.exists(entry.resolveSibling(".0.crc")))
+    Using.resource(new RandomAccessFile(entry.toFile, "rw")) { f =>
+      val at = f.length() / 2
+      f.seek(at)
+      val b = f.read()
+      f.seek(at)
+      f.write(b ^ 0x01)
+    }
+    val e = intercept[Exception](run())
+    def chain(t: Throwable): Seq[Throwable] = if (t == null) Nil else t +: chain(t.getCause)
+    assert(chain(e).exists(_.isInstanceOf[ChecksumException]), chain(e).mkString("\n"))
+  }
 }

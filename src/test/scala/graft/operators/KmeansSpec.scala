@@ -50,6 +50,6 @@ class KmeansSpec extends SparkSpec {
     assert(messages(e).exists(m =>
       m.contains("malformed embedding") && m.contains("vec_id=2")),
       s"unexpected error chain: ${messages(e).mkString(" | ")}")
-    Clustering.invalidateVecCache() // drop the poisoned memo entry
+    graft.core.Memo.clear() // drop the poisoned cache entry
   }
 }

@@ -27,23 +27,10 @@ class PlanSpec extends SparkSpec {
     * fresh 100 TB run would compile to. Tests that pin a warm-store
     * shape (assert InMemoryTableScan) keep the plain [[executed]]. */
   private def executedCold(df: => org.apache.spark.sql.DataFrame): String = {
-    // clearCache unpersists the memoized shared stores too — drop their
-    // memo entries so later warm-shape tests rebuild them (the contract
-    // documented on Corpus.invalidateContamCache)
+    // clearCache unpersists the cached shared stores too — drop their
+    // entries so later warm-shape tests rebuild them
     spark.sharedState.cacheManager.clearCache()
-    Clustering.invalidateLabelCache()
-    Clustering.invalidateVecCache()
-    Clustering.invalidateIncrementalStore()
-    Corpus.invalidateContamCache()
-    Multimodal.invalidateModalCache()
-    Multimodal.invalidateIncModalStore()
-    Graph.invalidateEdgeStore()
-    Scale.invalidateBucketed()
-    Scale.invalidateDayStore()
-    Scale.invalidateZorderStore()
-    Scale.invalidateWidenStore()
-    Temporal.invalidateScd2Store()
-    Similarity.invalidateIvfArtifact()
+    graft.core.Memo.clear()
     Clustering.releaseMergeClosures()
     df.queryExecution.executedPlan.toString
   }
@@ -571,7 +558,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_shingle_novelty: reads the shared shingle store, aggregates only — no window sort") {
-    Corpus.shingleStore(spark, Sf0001) // warm, as Bench does
+    Corpus.shingleStore(spark, Sf0001) // warm: the plan reads the cached store
     val plan = executed(Corpus.qShingleNovelty(spark, Sf0001))
     assert(plan.contains("InMemoryTableScan"), "must read the persisted shingle store")
     // df and ownership come from hash aggregates, never a window
@@ -855,7 +842,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_incremental_clusters: the merge never re-closes the corpus — stores read cached, closure is a bounded RDD artifact") {
-    Clustering.incrementalStore(spark, Sf0001) // warm, as Bench does
+    Clustering.incrementalStore(spark, Sf0001) // warm: the plan reads the cached store
     val plan = executed(Clustering.qIncrementalClusters(spark, Sf0001))
     // the persisted label store and signature store feed every branch
     assert(plan.contains("InMemoryTableScan"), "must read the persisted stores")
@@ -869,7 +856,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_incremental_modal: merge reads the persisted modal store; closure is a bounded RDD artifact") {
-    Multimodal.incModalStore(spark, Sf0001) // warm, as Bench does
+    Multimodal.incModalStore(spark, Sf0001) // warm: the plan reads the cached store
     val plan = executed(Multimodal.qIncrementalModal(spark, Sf0001))
     assert(plan.contains("InMemoryTableScan"), "must read the persisted stores")
     assert(plan.contains("ExistingRDD"),
@@ -1184,7 +1171,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_source_overlap: incidence store read warm; intersection joins on the shingle hash only") {
-    Corpus.sourceShingleStore(spark, Sf0001) // warm, as Bench does
+    Corpus.sourceShingleStore(spark, Sf0001) // warm: the plan reads the cached store
     val plan = executed(Corpus.qSourceOverlap(spark, Sf0001))
     assert(plan.contains("InMemoryTableScan"), "must read the persisted incidence store")
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"))
@@ -1200,7 +1187,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_canonical_pick: label store read warm; the pick is one cluster-keyed window, no cross product") {
-    Clustering.dupLabels(spark, Sf0001) // warm, as Bench does
+    Clustering.dupLabels(spark, Sf0001) // warm: the plan reads the cached store
     val plan = executed(Clustering.qCanonicalPick(spark, Sf0001))
     assert(plan.contains("InMemoryTableScan"), "must read the persisted label store")
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"))

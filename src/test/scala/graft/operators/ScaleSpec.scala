@@ -604,7 +604,7 @@ class ScaleSpec extends SparkSpec {
     // next qTimeTravel call rebuilds from scratch — and prove it does
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Scale.invalidateTimeTravelStore()
+    graft.core.Memo.clear()
     fs.delete(new org.apache.hadoop.fs.Path(base), true)
     assert(Scale.qTimeTravel(spark, Sf0001).count() > 0,
       "the gate must rebuild green after a live vacuum")

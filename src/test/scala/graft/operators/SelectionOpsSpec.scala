@@ -27,6 +27,31 @@ class SelectionOpsSpec extends SparkSpec {
     }
   }
 
+  test("q_mmr_rerank: NaN scores take the SQL order (NaN first, ties to the smallest doc id)") {
+    import spark.implicits._
+    // cosine against a vector with a NaN component is NaN in Spark and
+    // DuckDB alike (a zero-norm vector is not: Spark raises
+    // DIVIDE_BY_ZERO on 0/0 and DuckDB returns NULL). Docs 0-4 lie on
+    // one fan in the plane, so by relevance each query's nearest
+    // neighbours are NOT in doc-id order; doc 5 carries a NaN.
+    val dir = java.nio.file.Files.createTempDirectory("graft_mmr_nan").toString
+    def vec(a: Double, b: Double) = (Seq(a, b) ++ Seq.fill(Similarity.Dims - 2)(1e-3)).toArray
+    ((0L to 4L).map(i => (i, vec(1.0, 4.0 - i))) :+ ((5L, vec(Double.NaN, 1.0))))
+      .toDF("vec_id", "embedding").write.parquet(s"$dir/embeddings.parquet")
+    val picks = Similarity.qMmr(spark, dir).collect()
+      .groupBy(_.getAs[Long]("query_id"))
+      .map { case (q, rows) => q -> rows.sortBy(_.getAs[Long]("step")).map(_.getAs[Long]("doc_id")).toSeq }
+    // ORDER BY score DESC, doc_id: a query's step-1 score against doc 5
+    // is NaN, so doc 5 comes first; from step 2 every candidate's
+    // max-sim penalty against doc 5 is NaN, so all scores tie and the
+    // smallest doc id wins. Query 5's own relevances are all NaN.
+    val expected = (0L to 5L).map { q =>
+      val others = (0L to 5L).filter(_ != q)
+      q -> (if (q == 5L) others else 5L +: others.filter(_ != 5L))
+    }.toMap
+    assert(picks == expected)
+  }
+
   test("q_priority_sample: per-source counts and the ŵ = max(w, τ) estimator floor") {
     val rows = Sampling.qPrioritySample(spark, Sf001).collect()
     val pop = spark.read.parquet(s"$Sf001/documents.parquet")

@@ -34,8 +34,8 @@ object ConcurrencyHarness {
     val gates = GateNames.map(n => n -> SparkEntry.queries(n))
 
     // JIT/codegen warmup at the small SF, then prewarm the shared
-    // stores at the target SF (the Bench stance: both passes below
-    // measure warm serving, which is what concurrency contends on)
+    // stores at the target SF (both passes below measure warm serving,
+    // which is what concurrency contends on)
     gates.foreach { case (_, fn) => fn(spark, "/root/testdata/sf0.001").count() }
     gates.foreach { case (_, fn) => fn(spark, dir).count() }
 

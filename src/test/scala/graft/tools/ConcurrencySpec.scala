@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 
 import graft.SparkSpec
 import graft.SparkSpec.Sf0001
+import graft.core.Memo
 import graft.operators.{Clustering, Corpus, Graph}
 
 /** Concurrency contract of the session-scoped memoized stores
@@ -33,17 +34,17 @@ class ConcurrencySpec extends SparkSpec {
     // pairs store stays warm so the races below isolate each target memo
     graft.operators.Dedup.minhashLshPairsCore(spark, Sf0001).count()
 
-    Clustering.invalidateLabelCache()
+    Memo.clear()
     val labelFrames = inParallel(8)(_ => Clustering.dupLabels(spark, Sf0001))
     assert(labelFrames.map(System.identityHashCode).distinct.size == 1,
       "every concurrent reader must be handed the same memoized label frame")
     assert(labelFrames.head.count() > 0)
 
-    Corpus.invalidateContamCache()
+    Memo.clear()
     val contamFrames = inParallel(8)(_ => Corpus.decontaminateCore(spark, Sf0001))
     assert(contamFrames.map(System.identityHashCode).distinct.size == 1)
 
-    Graph.invalidateEdgeStore()
+    Memo.clear()
     val stores = inParallel(8)(_ => Graph.transactionEdgeStore(spark, Sf0001))
     assert(stores.map(System.identityHashCode).distinct.size == 1,
       "the edge store must build once under a concurrent first read")

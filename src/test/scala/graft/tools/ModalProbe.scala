@@ -21,7 +21,7 @@ object ModalProbe {
       val n = body
       println(f"[modalprobe] $label%-30s ${(System.nanoTime() - t0) / 1e9}%7.3f s ($n rows)")
     }
-    // store builds land here (prewarm parity with Bench)
+    // store builds land here (prewarm)
     Multimodal.incModalStore(spark, dir).corpusLabels.count()
     Clustering.incrementalStore(spark, dir).corpusLabels.count()
     (1 to passes).foreach { p =>

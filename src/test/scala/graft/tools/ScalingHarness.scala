@@ -406,23 +406,7 @@ object ScalingHarness {
 
   private def resetCaches(spark: SparkSession): Unit = {
     spark.sqlContext.clearCache()
-    Clustering.invalidateLabelCache()
-    Clustering.invalidateVecCache()
-    Clustering.invalidateIncrementalStore()
-    Corpus.invalidateContamCache()
-    Multimodal.invalidateModalCache()
-    Multimodal.invalidateIncModalStore()
-    Graph.invalidateEdgeStore()
-    Scale.invalidateBucketed()
-    Scale.invalidateDayStore()
-    Scale.invalidateZorderStore()
-    Scale.invalidateBloomStore()
-    Scale.invalidateBloomIncStore()
-    Scale.invalidateTimeTravelStore()
-    Scale.invalidateUpsertStore()
-    Temporal.invalidateScd2Store()
-    Scale.invalidateWidenStore()
-    Similarity.invalidateIvfArtifact()
+    graft.core.Memo.clear()
     Clustering.releaseMergeClosures()
     graft.core.Scratch.release()
   }

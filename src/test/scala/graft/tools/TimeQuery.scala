@@ -4,8 +4,8 @@ import graft.{GraftSession, SparkEntry}
 
 /** Ad-hoc single-query timer for perf iteration (test scope — not part
   * of the library surface). Times `SparkEntry.queries(name)` N times at
-  * one SF dir and prints each pass, so a plan change can be measured
-  * without a full Bench fold. Run:
+  * one SF dir and prints each pass, every pass building its stores
+  * cold, so a plan change can be measured on its own. Run:
   *   sbt "Test/runMain graft.tools.TimeQuery <sfDir> <name> [runs]"
   */
 object TimeQuery {
@@ -19,11 +19,11 @@ object TimeQuery {
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       (1 to runs).foreach { i =>
-        graft.operators.Graph.invalidateResultMemos()
+        graft.core.Memo.clear()
         val t0 = System.nanoTime()
         val n = fn(spark, dir).count()
         println(f"[time] $name pass $i: ${(System.nanoTime() - t0) / 1e9}%.3f s ($n rows)")
-        graft.core.Scratch.release() // honest per-pass cost (Bench parity)
+        graft.core.Scratch.release() // honest per-pass cost
       }
     }
     spark.stop()
