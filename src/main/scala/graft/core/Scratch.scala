@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.storage.StorageLevel
 
 /** Per-query scratch-persist registry (round-15 bench honesty fix).
   *
@@ -35,11 +36,13 @@ object Scratch {
       scala.collection.mutable.ArrayBuffer.empty
   }
 
-  /** Persist `ds` and register it for release at query exit. */
+  /** Persist `ds` and register it for release at query exit. A plan
+    * that is cached already belongs to whoever cached it (a [[Memo]]
+    * store): it is read, not registered, since releasing it would drop
+    * that store's cache. */
   def persist[T](ds: Dataset[T]): Dataset[T] = {
-    val p = ds.persist()
-    tracked.get += p
-    p
+    if (ds.storageLevel == StorageLevel.NONE) tracked.get += ds
+    ds.persist()
   }
 
   /** Unpersist every scratch frame registered on this thread since the

@@ -3,12 +3,11 @@ package graft.io
 import java.io.FileNotFoundException
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.SparkSession
 
 /** The data entries of a directory, as Spark's file index sees them:
   * names prefixed `_` or `.` (`_SUCCESS`, `_temporary/` left by a
   * crashed write, `_staging-*`, checksum files) are not data. The
-  * idempotent sinks and the store cache ([[graft.core.Memo]]) all ask
+  * idempotent sink and the store cache ([[graft.core.Memo]]) all ask
   * here, so "which files are data?" has one answer. */
 private[graft] object StoreListing {
 
@@ -23,9 +22,4 @@ private[graft] object StoreListing {
     * stored as a directory of part files, a `key=value` partition). */
   def files(fs: FileSystem, dir: Path): Seq[FileStatus] =
     list(fs, dir).flatMap(s => if (s.isDirectory) files(fs, s.getPath) else Seq(s))
-
-  def hasData(spark: SparkSession, path: String): Boolean = {
-    val dir = new Path(path)
-    list(dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir).nonEmpty
-  }
 }

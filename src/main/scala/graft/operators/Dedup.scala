@@ -97,11 +97,7 @@ object Dedup {
     // Persisted signature store: the sha-heavy per-doc work runs ONCE
     // and feeds both the band join and the verify join (at cluster
     // scale this is the signatures-to-storage materialization step).
-    val sigs = Tables.documentsSharded(spark, dir)
-      .select($"doc_id",
-        TextKernelFunctions.shingleSet($"text").as("sh"),
-        TextKernelFunctions.minhashSig($"text").as("sig"))
-      .persist()
+    val sigs = Scratch.persist(signatureFrame(Tables.documentsSharded(spark, dir)))
     sigs.count() // eager: both join branches read the materialized store
     // Band join carries only (doc_id, bkey) — the shingle arrays never
     // enter the shuffle; the band index is baked into the band hash.
@@ -155,14 +151,11 @@ object Dedup {
     val cand = candidateJaccardCore(spark, dir)
       .filter($"doc_a" < AuditSample && $"doc_b" < AuditSample)
       .select($"doc_a", $"doc_b", ($"jaccard" >= 0.5).as("pass"))
-    // same canonicalized plan as the persisted signature store inside
-    // candidateJaccardCore — this read hits that cache, not the scan;
-    // the sample bound keeps the all-pairs side quadratic in the
-    // SAMPLE (the qNgramJaccard contract), never the corpus
-    val sigs = Tables.documentsSharded(spark, dir)
-      .select($"doc_id",
-        TextKernelFunctions.shingleSet($"text").as("sh"),
-        TextKernelFunctions.minhashSig($"text").as("sig"))
+    // the signature store candidateJaccardCore persisted for this
+    // query — this read hits that cache, not the scan; the sample bound
+    // keeps the all-pairs side quadratic in the SAMPLE (the
+    // qNgramJaccard contract), never the corpus
+    val sigs = signatureFrame(Tables.documentsSharded(spark, dir))
       .filter($"doc_id" < AuditSample)
     val truth = sigs.as("a")
       .join(sigs.as("b"), col("a.doc_id") < col("b.doc_id"))
@@ -720,9 +713,8 @@ object Dedup {
   }
 
   def qIncrementalDedup(spark: SparkSession, dir: String): DataFrame = {
-    val base = signatureFrame(Tables.documentsSharded(spark, dir)
-        .select($"doc_id", $"text"))
-      .persist()
+    val base = Scratch.persist(signatureFrame(Tables.documentsSharded(spark, dir)
+        .select($"doc_id", $"text")))
     base.count() // both splits and both join branches read one store
     val incoming = base.filter($"doc_id" % IncomingMod === IncomingRem)
     val corpus = base.filter($"doc_id" % IncomingMod =!= IncomingRem)

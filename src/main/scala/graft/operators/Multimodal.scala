@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Memo
+import graft.core.{Memo, Scratch}
 import graft.functions.Hashing
 import graft.sources.Tables
 
@@ -176,11 +176,8 @@ object Multimodal {
     * ([[qModalDedup]]) compose over without paying the presentation
     * sort (the [[Dedup.minhashLshPairsCore]] convention). */
   def imageNeardupCore(spark: SparkSession, dir: String): DataFrame = {
-    val base = payloadTable(spark, dir)
-      .select($"doc_id",
-        graft.functions.TextKernelFunctions.phash60(
-          decode($"payload", "UTF-8")).as("phash"))
-      .persist() // computed once, read by both join sides
+    // computed once, read by both join sides
+    val base = Scratch.persist(phashFrame(payloadTable(spark, dir)))
     base.count() // eager materialization
     Dedup.chunkBucketPairs(base, "phash")
   }
@@ -349,8 +346,8 @@ object Multimodal {
   }
 
   def qIncrementalPhash(spark: SparkSession, dir: String): DataFrame = {
-    val base = phashFrame(payloadTable(spark, dir))
-      .persist() // both splits and both probe branches read one store
+    // both splits and both probe branches read one store
+    val base = Scratch.persist(phashFrame(payloadTable(spark, dir)))
     base.count()
     val incoming = base.filter($"doc_id" % Dedup.IncomingMod === Dedup.IncomingRem)
     val corpus = base.filter($"doc_id" % Dedup.IncomingMod =!= Dedup.IncomingRem)
@@ -457,7 +454,7 @@ object Multimodal {
   /** Unordered audio near-dup pair set (see [[imageNeardupCore]]):
     * hamming(ahash) ≤ 3 via the chunk pigeonhole bucket join. */
   def audioNeardupCore(spark: SparkSession, dir: String): DataFrame = {
-    val base = audioFrame(payloadTable(spark, dir)).persist()
+    val base = Scratch.persist(audioFrame(payloadTable(spark, dir)))
     base.count() // eager, both join sides read one materialization
     Dedup.chunkBucketPairs(base, "ahash")
   }
@@ -765,7 +762,7 @@ object Multimodal {
     // materialize the batch's four probe-join families ONCE: the edge
     // merge and the incidence aggregate below both read them (scratch-
     // tracked so the harness releases it at query exit)
-    val newTagged = graft.core.Scratch.persist(
+    val newTagged = Scratch.persist(
       newText.unionByName(newImage).unionByName(newVideo)
         .unionByName(newAudio))
     newTagged.count()

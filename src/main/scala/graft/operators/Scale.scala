@@ -671,7 +671,8 @@ object Scale {
   // in PlanSpec. X159 pinned this on the ANN cell column and the
   // ShardRouter on shard; this is the TIME-column instance, with the
   // streaming ingest face in [[graft.streaming.DayRouter]] (the same
-  // idempotent PartitionedAppend the shard router rides).
+  // partitioned [[graft.streaming.Streams.idempotentAppend]] the shard
+  // router rides: 2 jobs, reads only the files whose keys overlap).
   //
   // The store is written once per input and cached by
   // [[graft.core.Memo]] — the ingest-layout cost a deployed pipeline

@@ -54,18 +54,21 @@ object Similarity {
   private def dot(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.dotProduct(a, b)
 
-  /** Cosine similarity of two array<double> columns, fold-ordered. */
+  /** Cosine similarity of two array<double> columns, fold-ordered.
+    * NULL when either vector has norm 0, as in SQL (`try_divide`: the
+    * division's own zero check, NULL instead of ANSI's error). */
   def cosineCol(a: Column, b: Column): Column =
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
+    try_divide(dot(a, b), sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
   /** Fold-ordered L2 norm — precomputed per vector so pair joins do one
     * dot product per candidate instead of three. Bit-identical to
     * [[cosineCol]]: same fold, same sqrt, same multiply. */
   def normCol(v: Column): Column = sqrt(dot(v, v))
 
-  /** Cosine from a shared dot fold and precomputed norms. */
+  /** Cosine from a shared dot fold and precomputed norms; NULL for a
+    * zero norm, as [[cosineCol]]. */
   def cosineWithNorms(a: Column, b: Column, na: Column, nb: Column): Column =
-    dot(a, b) / (na * nb)
+    try_divide(dot(a, b), na * nb)
 
   /** LSH bucket id: bit p set iff dot(v, plane_p) > 0. */
   def bucketCol(v: Column): Column =
@@ -910,10 +913,11 @@ object Similarity {
     // NOT a collect over corpus data), with the identical IEEE
     // arithmetic (max-sim penalty, 0.7/0.3 λ-blend) and the SQL order
     // of `score DESC, doc_id`: NaN above every number and equal to
-    // NaN, ties to the smallest doc id — same picks, same doubles,
-    // same hash.
+    // NaN, NULL (a zero-norm vector's relevance) below every number,
+    // ties to the smallest doc id — same picks, same doubles, same
+    // hash.
     val slRows = shortlist.select($"query_id", $"doc_id", $"rel").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .map(r => (r.getLong(0), r.getLong(1), Option.unless(r.isNullAt(2))(r.getDouble(2))))
     val prRows = shortlist.as("x").join(shortlist.as("y"),
         col("x.query_id") === col("y.query_id") &&
           col("x.doc_id") =!= col("y.doc_id"))
@@ -921,7 +925,9 @@ object Similarity {
         col("x.doc_id").as("a"), col("y.doc_id").as("b"),
         cosineWithNorms(col("x.v"), col("y.v"), col("x.nv"), col("y.nv")).as("sim"))
       .collect()
-      .map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getDouble(3))))
+      .collect { // max(sim) skips a NULL sim
+        case r if !r.isNullAt(3) => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getDouble(3)))
+      }
     shortlist.unpersist()
     // (query, cand) → (other, sim) list, for the max-sim penalty
     val simsByQa = prRows.groupBy(_._1)
@@ -929,13 +935,14 @@ object Similarity {
     val byQuery = slRows.groupBy(_._1).toSeq.sortBy(_._1)
     val selected = scala.collection.mutable.Map
       .empty[Long, Set[Long]].withDefaultValue(Set.empty)
-    val picks = Seq.newBuilder[(Long, Long, Long, Double, Double)]
+    val picks = Seq.newBuilder[(Long, Long, Long, Option[Double], Option[Double])]
     (1 to MmrSteps).foreach { k =>
       byQuery.foreach { case (q, rows) =>
         val selQ = selected(q)
         val cands = rows.filter(t => !selQ.contains(t._2))
         if (cands.nonEmpty) {
-          var bestId = 0L; var bestRel = 0.0; var bestScore = 0.0
+          var bestId = 0L; var bestRel = Option.empty[Double]
+          var bestScore = Option.empty[Double]
           var first = true
           cands.foreach { case (_, d, rel) =>
             // max(sim) over selected neighbors; coalesce(·, 0.0)
@@ -946,8 +953,11 @@ object Similarity {
                   pen = if (any) math.max(pen, sim) else sim; any = true
                 }
               }
-            val score = 0.7 * rel - 0.3 * (if (any) pen else 0.0)
-            val order = SQLOrderingUtil.compareDoubles(score, bestScore)
+            val score = rel.map(0.7 * _ - 0.3 * (if (any) pen else 0.0))
+            val order = (score, bestScore) match {
+              case (Some(a), Some(b)) => SQLOrderingUtil.compareDoubles(a, b)
+              case (a, b) => a.size - b.size // NULL below every number
+            }
             if (first || order > 0 || (order == 0 && d < bestId)) {
               bestId = d; bestRel = rel; bestScore = score; first = false
             }
@@ -1424,10 +1434,11 @@ object Similarity {
   // CELL partition column): a persisted inverted file is only worth
   // its build cost if arriving vectors can join it WITHOUT a rebuild.
   // The incoming batch is assigned against the SAME frozen centroids
-  // and idempotent-appended into its cell directories through the
-  // shared [[graft.streaming.PartitionedAppend]] primitive — the
-  // append touches only the batch's cells, replays anti-join against
-  // those partitions alone and no-op, and the probe path is unchanged.
+  // and idempotent-appended into its cell directories through
+  // [[graft.streaming.Streams.idempotentAppend]] — 2 Spark jobs that
+  // read only the store files whose vec_id range overlaps the batch's,
+  // replays no-op (vec_id is unique across cells), and the probe path
+  // is unchanged.
   // The GATE builds the artifact from the corpus slice (vec_id mod 10
   // ≠ 7, the repo's ingest-split convention), appends the incoming
   // slice as a second write, and serves the SAME probe — the ORACLE is
@@ -1444,8 +1455,8 @@ object Similarity {
       val incoming = ranked
         .filter($"rk" === 1 && $"vec_id" % Dedup.IncomingMod === Dedup.IncomingRem)
         .select($"vec_id", $"v", $"nv", $"cent_id".as("cell"))
-      graft.streaming.PartitionedAppend.append(
-        incoming, s"$base/inverted", "cell", "vec_id")
+      graft.streaming.Streams.idempotentAppend(
+        incoming, Seq("vec_id"), s"$base/inverted", Seq("cell"))
       ranked.unpersist()
       base
     })

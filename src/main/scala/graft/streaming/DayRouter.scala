@@ -17,21 +17,21 @@ import org.apache.spark.sql.functions._
  * on the day column, machine-pinned in PlanSpec.
  *
  * Scale stance mirrors [[ShardRouter]] (the two are the same
- * [[PartitionedAppend]] primitive with different partition functions):
+ * [[Streams.idempotentAppend]] with different partition functions):
  *  - day assignment is per-row codegen'd arithmetic, zero shuffle;
- *  - replays anti-join only the day partitions the batch touches
- *    (bounded by the batch's time span, never the store's);
- *  - exactly-once rides the deterministic event_id key.
+ *  - an append is 2 Spark jobs (the dedup shuffle and one staged write)
+ *    and reads only the store files whose event_id range overlaps the
+ *    batch's, never the store;
+ *  - exactly-once rides the deterministic event_id key, unique across
+ *    days: a redelivered event lands once even if its day changed.
  */
 class DayRouter(path: String) {
 
   /** Route one event batch (event_id, ts, user_id, event_type, value)
     * into the store. Safe to replay. */
   def route(batch: DataFrame): Unit = {
-    val assigned = batch
-      .withColumn("day", expr("unix_millis(ts) div 86400000"))
-      .dropDuplicates("event_id")
-    PartitionedAppend.append(assigned, path, "day", "event_id")
+    val assigned = batch.withColumn("day", expr("unix_millis(ts) div 86400000"))
+    Streams.idempotentAppend(assigned, Seq("event_id"), path, Seq("day"))
   }
 
   /** foreachBatch face for a streaming ingestion query. */

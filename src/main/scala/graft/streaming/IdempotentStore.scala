@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.io.IOException
+import java.net.URI
 import java.util.UUID
 
 import scala.collection.concurrent.TrieMap
@@ -20,33 +21,38 @@ import org.apache.spark.sql.types.{DataType, StructType}
 import graft.io.StoreListing
 
 /**
- * K3 engine: [[Streams.idempotentAppend]] as an O(batch) commit.
+ * K3 engine: [[Streams.idempotentAppend]] as an O(batch) commit, and
+ * the engine's only idempotent append.
  *
- * A flat store (data files directly under the store directory) keeps
- * an in-process manifest per (store, key columns, key types): each data
- * file's length, modification time and the [lo, hi] of every key
- * column. One append then runs:
+ * A store is flat (data files directly under the store directory) or
+ * partitioned (`k=v` directories, one level per `partitionBy` column,
+ * as Spark's partitioned writer lays them out). Either way an
+ * in-process manifest per (store, key columns, key types) holds each
+ * data file's length, modification time and the [lo, hi] of every key
+ * column, keyed by its path relative to the store (`cell=3/part-…`:
+ * Spark reuses one part-file name in every partition of a write). One
+ * append then runs:
  *
- *  1. one directory listing, which validates the manifest — entries
- *     whose file vanished or changed are dropped, and files the
- *     manifest has not seen (first use in a JVM, another writer) get
- *     their bounds from one min/max job grouped by file name, read with
- *     the known key schema;
- *  2. one staged write: the batch, deduplicated on the key, goes into
- *     a hidden `_staging-<uuid>` directory under the store, and an
- *     [[Observation]] on that same job yields its row count and key
- *     bounds;
+ *  1. one recursive listing, which checks the store's layout against
+ *     `partitionBy` (an append never mixes layouts) and validates the
+ *     manifest — entries whose file vanished or changed are dropped,
+ *     and files the manifest has not seen (first use in a JVM, another
+ *     writer) get their bounds from one min/max job grouped by file
+ *     path, read with the known key schema;
+ *  2. one staged write: the batch, deduplicated on the key, goes
+ *     (partitioned like the store) into a hidden `_staging-<uuid>`
+ *     directory under the store, and an [[Observation]] on that same
+ *     job yields its row count and key bounds;
  *  3. the overlap test: a store file can hold a conflicting key only if
  *     its range overlaps the batch's on every key column (compared with
  *     Spark's ordering for the column type; a type with no ordering
- *     overlaps everything);
+ *     overlaps everything). Files of every partition are tested, so a
+ *     key is unique across the store, as under a SQL unique constraint;
  *  4. the commit: with no overlapping file the staged part files are
- *     renamed into the store; otherwise the staged rows are anti-joined
- *     against the overlapping files only, and the result is renamed in.
- *     The staging directory is always deleted.
- *
- * A store with sub-directories (partitioned data) takes the full
- * anti-join against everything on disk instead.
+ *     renamed into the matching directories of the store; otherwise the
+ *     staged rows are anti-joined against the overlapping files only,
+ *     and the result is renamed in. The staging directory is always
+ *     deleted.
  */
 private[streaming] object IdempotentStore {
 
@@ -88,7 +94,11 @@ private[streaming] object IdempotentStore {
 
   private val manifests = TrieMap.empty[(String, Seq[String], Seq[DataType]), Manifest]
 
-  def append(batch: DataFrame, keyCols: Seq[String], path: String): Unit = {
+  def append(batch: DataFrame, keyCols: Seq[String], path: String,
+             partitionBy: Seq[String]): Unit = {
+    // a partition column is not stored in the files the manifest bounds
+    require(keyCols.intersect(partitionBy).isEmpty,
+      s"key columns ${keyCols.mkString(", ")} must not be partition columns")
     val spark = batch.sparkSession
     val deduped = batch.dropDuplicates(keyCols)
     val keySchema = deduped.select(keyCols.map(col): _*).schema
@@ -98,54 +108,63 @@ private[streaming] object IdempotentStore {
     val m = manifests.getOrElseUpdate(
       (dir.toString, keyCols, keySchema.map(_.dataType)), new Manifest(keySchema))
     m.synchronized {
-      val listing = StoreListing.list(fs, dir)
-      if (listing.exists(_.isDirectory)) {
-        // Partitioned or nested data: no per-file manifest; anti-join
-        // against every key on disk, as a store-sized read.
-        val existing = spark.read.parquet(path).select(keyCols.map(col): _*)
-        deduped.join(existing, keyCols, "left_anti").write.mode("append").parquet(path)
-      } else {
-        refresh(spark, m, fs, listing, keySchema)
-        stagedAppend(deduped, keyCols, keySchema, m, fs, dir, listing.isEmpty)
+      val files = StoreListing.files(fs, dir).map(s => relative(dir, s.getPath) -> s).toMap
+      files.keys.foreach { name =>
+        val dirs = name.split('/').init
+        if (dirs.length != partitionBy.length ||
+            dirs.zip(partitionBy).exists { case (d, c) => !d.startsWith(s"$c=") })
+          throw new IllegalArgumentException(s"$dir holds $name, which is not in the layout " +
+            s"of partitionBy(${partitionBy.mkString(", ")}); an append does not mix layouts")
       }
+      refresh(spark, m, fs, dir, files, keySchema)
+      stagedAppend(deduped, keyCols, partitionBy, keySchema, m, fs, dir, files.isEmpty)
     }
   }
 
-  private def stagedAppend(deduped: DataFrame, keyCols: Seq[String], keySchema: StructType,
-                           m: Manifest, fs: FileSystem, dir: Path, emptyStore: Boolean): Unit = {
+  /** `file`'s path below `dir`, `/`-separated. */
+  private def relative(dir: Path, file: Path): String =
+    file.toUri.getPath.stripPrefix(dir.toUri.getPath + "/")
+
+  private def stagedAppend(deduped: DataFrame, keyCols: Seq[String], partitionBy: Seq[String],
+                           keySchema: StructType, m: Manifest, fs: FileSystem, dir: Path,
+                           emptyStore: Boolean): Unit = {
     val spark = deduped.sparkSession
     val staging = new Path(dir, s"_staging-${UUID.randomUUID()}")
     // listed as files: a `_`-prefixed directory given to a reader is
     // read, but logged as ignored
-    def partFiles(d: Path) = StoreListing.list(fs, d).filter(_.isFile)
+    def partFiles(d: Path) = StoreListing.files(fs, d)
     try {
       val staged = Observation()
       deduped.observe(staged, count(lit(1)).as("rows"), m.boundAggs: _*)
-        .write.parquet(staging.toString)
+        .write.partitionBy(partitionBy: _*).parquet(staging.toString)
       val stats = staged.get
       val range = m.range(stats)
       val candidates = m.files.collect { case (name, e) if m.overlaps(e.range, range) => name }
+      val batchRows = stats("rows").asInstanceOf[Long]
       val (out, rows) =
-        if (candidates.isEmpty) (staging, stats("rows").asInstanceOf[Long])
+        if (candidates.isEmpty || batchRows == 0) (staging, batchRows)
         else {
           val fresh = new Path(staging, "_fresh")
           val kept = Observation()
           val existing = spark.read.schema(keySchema)
             .parquet(candidates.map(new Path(dir, _).toString).toSeq: _*)
-          spark.read.schema(deduped.schema).parquet(partFiles(staging).map(_.getPath.toString): _*)
+          spark.read.schema(deduped.schema).option("basePath", staging.toString)
+            .parquet(partFiles(staging).map(_.getPath.toString): _*)
             .join(existing, keyCols, "left_anti")
             .observe(kept, count(lit(1)).as("rows"))
-            .write.parquet(fresh.toString)
+            .write.partitionBy(partitionBy: _*).parquet(fresh.toString)
           (fresh, kept.get("rows").asInstanceOf[Long])
         }
       // An empty result adds no file, except as the first content of an
       // empty store (so the store reads back with its schema).
       if (rows > 0 || emptyStore)
         partFiles(out).foreach { s =>
-          val dst = new Path(dir, s.getPath.getName)
+          val name = relative(out, s.getPath)
+          val dst = new Path(dir, name)
+          if (name.contains('/')) fs.mkdirs(dst.getParent)
           if (!fs.rename(s.getPath, dst)) throw new IOException(s"cannot move ${s.getPath} to $dst")
           val moved = fs.getFileStatus(dst)
-          m.files(dst.getName) = Entry(moved.getLen, moved.getModificationTime, range)
+          m.files(name) = Entry(moved.getLen, moved.getModificationTime, range)
         }
     } finally fs.delete(staging, true)
   }
@@ -154,26 +173,25 @@ private[streaming] object IdempotentStore {
     * file vanished or changed, and reads the key bounds of files it has
     * not seen in one grouped min/max job. A file that fails to read
     * fails the append. */
-  private def refresh(spark: SparkSession, m: Manifest, fs: FileSystem,
-                      listing: Seq[FileStatus], keySchema: StructType): Unit = {
-    val byName = listing.map(s => s.getPath.getName -> s).toMap
+  private def refresh(spark: SparkSession, m: Manifest, fs: FileSystem, dir: Path,
+                      files: Map[String, FileStatus], keySchema: StructType): Unit = {
     m.files.filterInPlace { (name, e) =>
-      byName.get(name).exists(s => s.getLen == e.length && s.getModificationTime == e.mtime)
+      files.get(name).exists(s => s.getLen == e.length && s.getModificationTime == e.mtime)
     }
-    val unknown = listing.filterNot(s => m.files.contains(s.getPath.getName))
+    val unknown = files.filterNot { case (name, _) => m.files.contains(name) }
     if (unknown.isEmpty) return
     val found =
       if (m.boundAggs.isEmpty) Map.empty[String, KeyRange] // nothing to bound: all overlap
-      else spark.read.schema(keySchema).parquet(unknown.map(_.getPath.toString): _*)
-        .groupBy(col("_metadata.file_name"))
+      else spark.read.schema(keySchema).parquet(unknown.values.map(_.getPath.toString).toSeq: _*)
+        .groupBy(col("_metadata.file_path"))
         .agg(m.boundAggs.head, m.boundAggs.tail: _*)
-        .collect().map(r => r.getString(0) -> m.range(r.getAs[Any](_))).toMap
+        .collect().map(r => relative(dir, new Path(new URI(r.getString(0)))) -> m.range(r.getAs[Any](_)))
+        .toMap
     val none = KeyRange(new Array[Any](keySchema.length), new Array[Any](keySchema.length))
-    unknown.foreach { s =>
-      val name = s.getPath.getName
+    unknown.foreach { case (name, s) =>
       val range = found.getOrElse(name, {
         // no group: the file must hold no rows, or its rows would have
-        // been attributed to another name
+        // been attributed to another path
         if (m.boundAggs.nonEmpty) {
           val rows = Using.resource(ParquetFileReader.open(
             HadoopInputFile.fromStatus(s, fs.getConf)))(_.getRecordCount)

@@ -100,25 +100,29 @@ object Streams {
   // strategy (deterministic id + unique constraint).
   //
   // Cost per batch is O(batch), whatever the store size
-  // ([[IdempotentStore]]): one directory listing, one staged write of
-  // the deduplicated batch (2 Spark jobs: its dedup shuffle and the
-  // write), and a rename of the staged files into the store. The store
+  // ([[IdempotentStore]], the engine's only idempotent append): one
+  // recursive listing, one staged write of the deduplicated batch (2
+  // Spark jobs: its dedup shuffle and the write), and a rename of the
+  // staged files into the store. `partitionBy` is the store's layout:
+  // none for a flat store, else its `k=v` directory columns in order;
+  // an append whose layout disagrees with the store's fails. The store
   // is read only where it can conflict: an in-process manifest holds
   // each data file's key-column [lo, hi] (memory O(files)), and the
   // batch is anti-joined against just the files whose range overlaps
-  // its own on every key column — replays, late duplicates, keys that
-  // are not monotonic. Files the manifest has not seen (first use in a
-  // JVM, another writer) cost one min/max job, once. A store with
-  // sub-directories falls back to the full anti-join. Null keys never
-  // conflict, as under a SQL unique constraint. A store file that was
-  // rewritten or is corrupt fails the append loudly.
+  // its own on every key column, in any partition — replays, late
+  // duplicates, keys that are not monotonic, a key redelivered under
+  // another partition value. Files the manifest has not seen (first use
+  // in a JVM, another writer) cost one min/max job, once. Null keys
+  // never conflict, as under a SQL unique constraint. A store file
+  // that was rewritten or is corrupt fails the append loudly.
   //
   // Across processes the sink is still read-then-append: two processes
   // appending the same new key at the same moment can both append it.
   // Appends within one process are serialized per store.
   // ------------------------------------------------------------------
-  def idempotentAppend(batch: DataFrame, keyCols: Seq[String], path: String): Unit =
-    IdempotentStore.append(batch, keyCols, path)
+  def idempotentAppend(batch: DataFrame, keyCols: Seq[String], path: String,
+                       partitionBy: Seq[String] = Nil): Unit =
+    IdempotentStore.append(batch, keyCols, path, partitionBy)
 
   /** foreachBatch wiring of [[idempotentAppend]] for a streaming query. */
   def idempotentSink(stream: DataFrame, keyCols: Seq[String], path: String): DataStreamWriter[org.apache.spark.sql.Row] =

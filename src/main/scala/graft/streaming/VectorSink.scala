@@ -10,16 +10,16 @@ import org.apache.spark.sql.DataFrame
  * centroid cell ([[graft.operators.Similarity.assignCells]] — the SAME
  * assignment the corpus builders use, so streamed placement can never
  * drift from a rebuild) and idempotent-appends it into the inverted
- * file's `cell=` directories through the shared [[PartitionedAppend]]
- * primitive.
+ * file's `cell=` directories through [[Streams.idempotentAppend]].
  *
  * Scale stance (the router contract):
  *  - cell assignment is a broadcast join against the ≤ |centroids|
  *    frame + one batch-keyed ranking window — zero corpus shuffle;
- *  - replays anti-join ONLY the cell partitions the batch touches
- *    (bounded by |centroids|, never the store), so redelivery is a
- *    no-op at any store size;
- *  - exactly-once rides the deterministic vec_id key;
+ *  - an append is 2 Spark jobs (the dedup shuffle and one staged
+ *    write) and reads only the store files whose vec_id range overlaps
+ *    the batch's, so redelivery is a no-op at any store size;
+ *  - exactly-once rides the deterministic vec_id key, unique across
+ *    cells;
  *  - the serving path ([[graft.operators.Similarity.probeArtifact]])
  *    is unchanged and stays partition-pruned after every ingest
  *    (ReplayEquivalenceSpec pins streamed ≡ one-shot build and the
@@ -29,11 +29,9 @@ class VectorSink(base: String) {
 
   /** Route one (vec_id, v) vector batch into the inverted file.
     * Safe to replay. */
-  def route(batch: DataFrame): Unit = {
-    val assigned = graft.operators.Similarity.assignCells(
-      batch.dropDuplicates("vec_id"))
-    PartitionedAppend.append(assigned, s"$base/inverted", "cell", "vec_id")
-  }
+  def route(batch: DataFrame): Unit =
+    Streams.idempotentAppend(graft.operators.Similarity.assignCells(batch),
+      Seq("vec_id"), s"$base/inverted", Seq("cell"))
 
   /** foreachBatch face for a streaming ingestion query. */
   def sink: (DataFrame, Long) => Unit = (batch, _) => { route(batch); () }

@@ -111,8 +111,8 @@ class AnnRecallSpec extends SparkSpec {
       .filter(col("vec_id") % graft.operators.Dedup.IncomingMod
         === graft.operators.Dedup.IncomingRem)
       .select(col("vec_id"), col("v"), col("nv"), col("cell").cast("long").as("cell"))
-    graft.streaming.PartitionedAppend.append(
-      incoming, s"$incBase/inverted", "cell", "vec_id")
+    graft.streaming.Streams.idempotentAppend(
+      incoming, Seq("vec_id"), s"$incBase/inverted", Seq("cell"))
     assert(spark.read.parquet(s"$incBase/inverted").count() == before,
       "a redelivered append must anti-join away")
   }

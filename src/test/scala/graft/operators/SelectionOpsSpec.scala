@@ -30,8 +30,7 @@ class SelectionOpsSpec extends SparkSpec {
   test("q_mmr_rerank: NaN scores take the SQL order (NaN first, ties to the smallest doc id)") {
     import spark.implicits._
     // cosine against a vector with a NaN component is NaN in Spark and
-    // DuckDB alike (a zero-norm vector is not: Spark raises
-    // DIVIDE_BY_ZERO on 0/0 and DuckDB returns NULL). Docs 0-4 lie on
+    // DuckDB alike (a zero-norm vector's is NULL in both). Docs 0-4 lie on
     // one fan in the plane, so by relevance each query's nearest
     // neighbours are NOT in doc-id order; doc 5 carries a NaN.
     val dir = java.nio.file.Files.createTempDirectory("graft_mmr_nan").toString
@@ -50,6 +49,29 @@ class SelectionOpsSpec extends SparkSpec {
       q -> (if (q == 5L) others else 5L +: others.filter(_ != 5L))
     }.toMap
     assert(picks == expected)
+  }
+
+  test("q_knn_brute, q_mmr_rerank: a zero-norm vector's cosine is NULL, as in SQL") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_zero_norm").toString
+    def vec(i: Long) = Array.tabulate(Similarity.Dims)(d => if (i == 3L) 0.0 else 1.0 + (d * (i + 1)) % 7)
+    (0L to 5L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
+      .write.parquet(s"$dir/embeddings.parquet")
+    val knn = Similarity.qKnnBruteForce(spark, dir).collect()
+    assert(knn.length == 6 * Similarity.TopK)
+    knn.foreach { r =>
+      val zero = r.getAs[Long]("query_id") == 3L || r.getAs[Long]("neighbor_id") == 3L
+      assert(r.isNullAt(r.fieldIndex("cosine")) == zero, r)
+    }
+    val mmr = Similarity.qMmr(spark, dir).collect()
+    assert(mmr.length == 6 * Similarity.MmrSteps)
+    mmr.foreach { r =>
+      val zero = r.getAs[Long]("query_id") == 3L || r.getAs[Long]("doc_id") == 3L
+      assert(r.isNullAt(r.fieldIndex("rel")) == zero && r.isNullAt(r.fieldIndex("mmr_score")) == zero, r)
+    }
+    // a NULL relevance ranks below every number: the zero vector is
+    // each other query's last pick
+    assert(mmr.filter(_.getAs[Long]("doc_id") == 3L).forall(_.getAs[Long]("step") == Similarity.MmrSteps))
   }
 
   test("q_priority_sample: per-source counts and the ŵ = max(w, τ) estimator floor") {

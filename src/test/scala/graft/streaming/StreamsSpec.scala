@@ -242,6 +242,111 @@ class StreamsSpec extends SparkSpec {
     assert(stagingDirs(path).isEmpty)
   }
 
+  /** Staging directories left anywhere in the store: its root or any
+    * partition directory. */
+  private def stagingDirsDeep(path: String): Seq[String] = {
+    def walk(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.filter(_.isDirectory).flatMap(c => c +: walk(c))
+    walk(new java.io.File(path)).map(_.getName).filter(_.startsWith("_staging-"))
+  }
+
+  /** (Spark jobs, input bytes read) of the jobs `body` runs. */
+  private def jobsAndBytesRead(body: => Unit): (Int, Long) = {
+    import org.apache.spark.scheduler._
+    val group = s"idem-count-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val bytesRead = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet(); e.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          bytesRead.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.GraftListenerAccess.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "idempotentAppend count")
+    try body
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.GraftListenerAccess.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    (jobs.get, bytesRead.get)
+  }
+
+  test("idempotentAppend partitioned: an append after N disjoint ones reads no store file and runs 2 jobs") {
+    import spark.implicits._
+    val path = tmpDir("idem_part_scale")
+    def batch(n: Int) = (n * 100L until n * 100L + 100L)
+      .map(i => (i, s"p$i", i % 3)).toDF("id", "payload", "part")
+    (0 until 12).foreach(n => Streams.idempotentAppend(batch(n), Seq("id"), path, Seq("part")))
+    val (jobs, bytesRead) = jobsAndBytesRead {
+      Streams.idempotentAppend(batch(12), Seq("id"), path, Seq("part"))
+    }
+    assert(jobs == 2, "one staged write: its dedup shuffle and the write")
+    assert(bytesRead == 0L, "no store file is read")
+    val stored = spark.read.parquet(path)
+    assert(stored.count() == 1300)
+    assert(stored.filter($"part" =!= $"id" % 3).isEmpty)
+    assert(new java.io.File(path).list().sorted.toSeq == Seq("part=0", "part=1", "part=2"))
+    assert(stagingDirsDeep(path).isEmpty)
+  }
+
+  test("idempotentAppend partitioned: replaying a plain partitioned write's rows adds nothing") {
+    import spark.implicits._
+    val path = tmpDir("idem_part_plain") + "/store"
+    val rows = (0L until 400L).map(i => (i, s"p$i", i % 4)).toDF("id", "payload", "day")
+    // two tasks, each writing every day: the same part-file names repeat
+    // in every day= directory
+    rows.repartition(2).write.partitionBy("day").parquet(path)
+    val names = new java.io.File(path).listFiles().toSeq.filter(_.isDirectory)
+      .flatMap(_.list().filter(_.startsWith("part-")))
+    assert(names.distinct.length < names.length, "part-file names must repeat across partitions")
+    Streams.idempotentAppend(rows, Seq("id"), path, Seq("day"))
+    assert(spark.read.parquet(path).count() == 400)
+    Streams.idempotentAppend(
+      (390L until 410L).map(i => (i, s"q$i", i % 4)).toDF("id", "payload", "day"), Seq("id"), path, Seq("day"))
+    val stored = spark.read.parquet(path)
+    assert(stored.count() == 410)
+    assert(stored.groupBy($"id").count().filter($"count" =!= 1).isEmpty)
+    assert(stored.filter($"id" === 395L).as[(Long, String, Long)].collect().toSeq == Seq((395L, "p395", 3L)))
+    assert(stagingDirsDeep(path).isEmpty)
+  }
+
+  test("idempotentAppend partitioned: a key redelivered under another partition is not appended again") {
+    import spark.implicits._
+    val path = tmpDir("idem_part_move")
+    Streams.idempotentAppend(Seq((1L, "a", 19730L), (2L, "b", 19730L)).toDF("event_id", "v", "day"),
+      Seq("event_id"), path, Seq("day"))
+    // event 2 redelivered with a ts in the next day, next to a fresh event
+    Streams.idempotentAppend(Seq((2L, "b-late", 19731L), (3L, "c", 19731L)).toDF("event_id", "v", "day"),
+      Seq("event_id"), path, Seq("day"))
+    val stored = spark.read.parquet(path).as[(Long, String, Long)].collect().sortBy(_._1).toSeq
+    assert(stored == Seq((1L, "a", 19730L), (2L, "b", 19730L), (3L, "c", 19731L)))
+    assert(stagingDirsDeep(path).isEmpty)
+  }
+
+  test("idempotentAppend: an append whose layout disagrees with the store's fails") {
+    import spark.implicits._
+    val path = tmpDir("idem_layout")
+    val batch = Seq((1L, "a", 0L)).toDF("id", "payload", "part")
+    Streams.idempotentAppend(batch, Seq("id"), path, Seq("part"))
+    val flat = intercept[IllegalArgumentException] {
+      Streams.idempotentAppend(Seq((2L, "b", 0L)).toDF("id", "payload", "part"), Seq("id"), path)
+    }
+    assert(flat.getMessage.contains("part=0/") && flat.getMessage.contains("layout"))
+    intercept[IllegalArgumentException] {
+      Streams.idempotentAppend(batch, Seq("id"), path, Seq("payload"))
+    }
+    assert(new java.io.File(path).list().toSeq == Seq("part=0"))
+    assert(spark.read.parquet(path).count() == 1)
+  }
+
   test("routeByType: one partitioned write, each type independently readable") {
     import spark.implicits._
     val path = tmpDir("route")
