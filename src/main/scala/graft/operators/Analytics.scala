@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.KeyedFsm
 import graft.sources.Tables
 
 /**
@@ -826,9 +827,9 @@ object Analytics {
   // s_t = (x_t + 3·s_{t-1}) div 4 (α = 1/4 as an exact rational —
   // truncating integer division, bit-identical in Spark `div`, Java
   // `/` and DuckDB `//`). The fold is inherently sequential per key,
-  // so the scale shape is the repo's spillable secondary-sort FSM
-  // (one shuffle on the type key, external day sort, O(1) state per
-  // key — the spoofing/density discipline); the ORACLE replays the
+  // so the scale shape is a graft.core.KeyedFsm replay (one shuffle
+  // on the type key, external day sort, O(1) state per key — the
+  // spoofing/density discipline); the ORACLE replays the
   // recurrence as a data-driven recursive CTE keyed on the per-type
   // row number (the pack-walk shape).
   // ------------------------------------------------------------------
@@ -844,19 +845,13 @@ object Analytics {
       .agg(sum(cents).as("x"))
       .select($"event_type", $"day", $"x")
       .as[(String, Long, Long)]
-    daily
-      .repartition(col("event_type"))
-      .sortWithinPartitions($"event_type", $"day")
-      .mapPartitions { it =>
-        graft.core.SecondarySort.runs(it)(_._1).flatMap { case (t, rows) =>
-          var s = 0L
-          var first = true
-          rows.map { case (_, d, x) =>
-            s = if (first) { first = false; x } else (x + EwmaNum * s) / EwmaDen
-            (t, d, x, s)
-          }
-        }
-      }
+    val ewma = new KeyedFsm[String, (String, Long, Long), Option[Long], (String, Long, Long, Long)](
+      "event_type", _._1, Seq("day"), Ordering.by(_._2),
+      None, { case (prev, (t, d, x)) =>
+        val s = prev.fold(x)(p => (x + EwmaNum * p) / EwmaDen)
+        (Some(s), Some((t, d, x, s)))
+      })
+    ewma.replay(daily)
       .toDF("event_type", "day", "x_cents", "ewma_cents")
       .orderBy($"event_type", $"day")
   }
@@ -890,8 +885,8 @@ object Analytics {
   // with the one-step forecast f_t = l_t + b_t — all exact rationals
   // in truncating integer division (Spark `div` ≡ Java `/` ≡ DuckDB
   // `//`, including negatives — the trend term b CAN go negative).
-  // Same scale shape as qEwma: inherently sequential per key ⇒ the
-  // spillable secondary-sort FSM, one type-keyed shuffle, O(1) state;
+  // Same scale shape as qEwma: inherently sequential per key ⇒ a
+  // KeyedFsm replay, one type-keyed shuffle, O(1) state;
   // oracle = the two-state data-driven recursive CTE walk.
   // ------------------------------------------------------------------
   def qHolt(spark: SparkSession, dir: String): DataFrame = {
@@ -903,25 +898,18 @@ object Analytics {
       .agg(sum(cents).as("x"))
       .select($"event_type", $"day", $"x")
       .as[(String, Long, Long)]
-    daily
-      .repartition(col("event_type"))
-      .sortWithinPartitions($"event_type", $"day")
-      .mapPartitions { it =>
-        graft.core.SecondarySort.runs(it)(_._1).flatMap { case (t, rows) =>
-          var l = 0L
-          var b = 0L
-          var first = true
-          rows.map { case (_, d, x) =>
-            if (first) { first = false; l = x; b = 0L }
-            else {
-              val lPrev = l
-              l = (x + EwmaNum * (lPrev + b)) / EwmaDen
-              b = ((l - lPrev) + EwmaNum * b) / EwmaDen
-            }
-            (t, d, x, l, b, l + b)
-          }
+    // state: (level, trend) once the first day is seen
+    val holt = new KeyedFsm[String, (String, Long, Long), Option[(Long, Long)],
+        (String, Long, Long, Long, Long, Long)](
+      "event_type", _._1, Seq("day"), Ordering.by(_._2),
+      None, { case (prev, (t, d, x)) =>
+        val (l, b) = prev.fold((x, 0L)) { case (lPrev, bPrev) =>
+          val l = (x + EwmaNum * (lPrev + bPrev)) / EwmaDen
+          (l, ((l - lPrev) + EwmaNum * bPrev) / EwmaDen)
         }
-      }
+        (Some((l, b)), Some((t, d, x, l, b, l + b)))
+      })
+    holt.replay(daily)
       .toDF("event_type", "day", "x_cents", "level_cents", "trend_cents",
         "forecast_cents")
       .orderBy($"event_type", $"day")

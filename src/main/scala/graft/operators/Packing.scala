@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.core.SecondarySort
+import graft.core.KeyedFsm
 import graft.sources.Tables
 
 /**
@@ -19,9 +19,8 @@ import graft.sources.Tables
  * doc_id order within a shard, and a bin closes when the next document
  * would overflow [[TokenBudget]] (an oversized document still gets a
  * bin of its own). Packing is inherently a sequential fold, so the
- * scale shape is the repo's spillable secondary-sort FSM (one shuffle
- * on shard, external sort, O(1) state per shard —
- * core/SecondarySort.scala).
+ * scale shape is a [[graft.core.KeyedFsm]] replay (one shuffle on
+ * shard, external sort, O(1) state per shard).
  *
  * The shard key is a PARAMETER ([[packBy]]); two policies ship:
  *
@@ -61,25 +60,18 @@ object Packing {
     * the mixture position for the curation capstone). */
   def packFrame(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits.newProductEncoder
-    val packed = docs
+    // state: (bin, fill); the first doc always opens bin 0
+    val nextFit = new KeyedFsm[Long, (Long, Long, Long, Long), (Long, Long), (Long, Long, Long, Long, Long)](
+      "shard", _._1, Seq("ord"), Ordering.by(_._2),
+      (-1L, 0L), { case ((bin, fill), (shard, _, docId, n)) =>
+        val (b, f) = if (bin < 0 || fill + n > TokenBudget) (bin + 1, n) else (bin, fill + n)
+        ((b, f), Some((docId, shard, n, b, f)))
+      })
+    nextFit.replay(docs
       .select(col("shard").cast("long"), col("ord").cast("long"),
         col("doc_id").cast("long"), col("n_tokens").cast("long"))
-      .as[(Long, Long, Long, Long)]
-      .repartition(col("shard"))
-      .sortWithinPartitions($"shard", $"ord")
-      .mapPartitions { it =>
-        SecondarySort.runs(it)(_._1).flatMap { case (shard, ds) =>
-          var bin = -1L
-          var fill = 0L
-          var first = true // the first doc always opens bin 0
-          ds.map { case (_, _, docId, n) =>
-            if (first || fill + n > TokenBudget) { bin += 1; fill = n; first = false }
-            else fill += n
-            (docId, shard, n, bin, fill)
-          }
-        }
-      }
-    packed.toDF("doc_id", "shard", "n_tokens", "bin", "bin_fill")
+      .as[(Long, Long, Long, Long)])
+      .toDF("doc_id", "shard", "n_tokens", "bin", "bin_fill")
   }
 
   /** The shared next-fit walk over an arbitrary integral shard key. */

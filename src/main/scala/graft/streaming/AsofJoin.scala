@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{Dataset, Encoders}
+
+import graft.core.KeyedFsm
 
 /**
  * Streaming face of the as-of join ([[graft.operators.Temporal.qAsofJoin]]):
@@ -29,37 +30,38 @@ object AsofJoin {
   /** Latest carrier per key. */
   final case class LastCarrier(c_ts: Long, c_val: Double)
 
+  /** A key with no carrier yet. */
+  val NoCarrier: LastCarrier = LastCarrier(Long.MinValue, 0.0)
+
   final case class Enriched(user_id: Long, ts_ms: Long, event_id: Long, value: Double,
                             click_ts_ms: Option[Long], click_value: Option[Double])
 
+  /** Carriers update the state, probes emit enriched with it. */
+  def step(last: LastCarrier, t: Tick): (LastCarrier, Option[Enriched]) =
+    if (t.side == 0) {
+      // same-ts carriers reduce by max value (batch: max(value) per
+      // (user, ts)); a newer ts always replaces, a late one is ignored.
+      if (last.c_ts == t.ts_ms) (LastCarrier(t.ts_ms, math.max(last.c_val, t.value)), None)
+      else if (last.c_ts > t.ts_ms) (last, None)
+      else (LastCarrier(t.ts_ms, t.value), None)
+    } else {
+      val found = Some(last).filter(_ != NoCarrier)
+      (last, Some(Enriched(t.user_id, t.ts_ms, t.event_id, t.value,
+        found.map(_.c_ts), found.map(_.c_val))))
+    }
+
+  /** Keyed by user, in (ts, side, event_id) order — carriers first at
+    * equal ts, mirroring the batch face's window sort. */
+  val fsm = new KeyedFsm[Long, Tick, LastCarrier, Enriched](
+    "user_id", _.user_id,
+    Seq("ts_ms", "side", "event_id"), Ordering.by(t => (t.ts_ms, t.side, t.event_id)),
+    NoCarrier, step,
+    keep = _ != NoCarrier)(
+    Encoders.product[LastCarrier])
+
+  /** Streaming face, no watermark. */
   def enrichStream(ticks: Dataset[Tick]): Dataset[Enriched] = {
     import ticks.sparkSession.implicits._
-    ticks
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[LastCarrier, Enriched](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[Tick], state: GroupState[LastCarrier]) =>
-          // Micro-batch fold in (ts, side, event_id) order — carriers
-          // first at equal ts, mirroring the batch face's window sort.
-          val sorted = it.toVector.sortBy(t => (t.ts_ms, t.side, t.event_id))
-          var last = state.getOption
-          val out = Vector.newBuilder[Enriched]
-          sorted.foreach { t =>
-            if (t.side == 0) {
-              last = last match {
-                // same-ts carriers reduce by max value (batch: max(value)
-                // per (user, ts)); a newer ts always replaces.
-                case Some(c) if c.c_ts == t.ts_ms => Some(LastCarrier(t.ts_ms, math.max(c.c_val, t.value)))
-                case Some(c) if c.c_ts > t.ts_ms  => Some(c) // late carrier: keep newest
-                case _                            => Some(LastCarrier(t.ts_ms, t.value))
-              }
-            } else {
-              out += Enriched(uid, t.ts_ms, t.event_id, t.value,
-                last.map(_.c_ts), last.map(_.c_val))
-            }
-          }
-          last.foreach(state.update)
-          out.result().iterator
-      }
+    fsm.stream(ticks, None)
   }
 }

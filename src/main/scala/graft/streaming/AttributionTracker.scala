@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.functions.{col, timestamp_seconds}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.core.KeyedFsm
 import SequenceTracker.SeqEvent
 
 /**
@@ -52,8 +52,18 @@ object AttributionTracker {
   /** One in-order step of the FSM — the pure twin of the batch window
     * at one row. The purchase reads state BEFORE any same-event
     * update, matching the window's strict `-1 PRECEDING` upper bound
-    * (a row never attributes to itself). */
-  def advance(st: AttrState, e: SeqEvent): (AttrState, Option[AttrOut]) =
+    * (a row never attributes to itself). A user with a click has state,
+    * so an event behind its last applied one is a cross-batch
+    * regression, and the step throws. */
+  def advance(st: AttrState, e: SeqEvent): (AttrState, Option[AttrOut]) = {
+    if (st.has && (e.ts_s < st.lastTs || (e.ts_s == st.lastTs && e.event_id < st.lastId)))
+      throw new IllegalStateException(
+        s"out-of-order cross-batch event for user ${e.user_id}: " +
+          s"(${e.ts_s}, ${e.event_id}) arrived after " +
+          s"(${st.lastTs}, ${st.lastId}) was applied — " +
+          "AttributionTracker requires in-order delivery across " +
+          "micro-batches (the SequenceTracker-family contract)")
+    val applied = st.copy(lastTs = e.ts_s, lastId = e.event_id)
     e.event_type match {
       case "purchase" =>
         val out =
@@ -61,44 +71,24 @@ object AttributionTracker {
             AttrOut(e.user_id, e.event_id, e.ts_s,
               Some(st.clickId), Some(st.clickTs), Some(e.ts_s - st.clickTs))
           else AttrOut(e.user_id, e.event_id, e.ts_s, None, None, None)
-        (st, Some(out))
-      case "click" => (AttrState(e.ts_s, e.event_id, has = true), None)
-      case _ => (st, None)
+        (applied, Some(out))
+      case "click" => (AttrState(e.ts_s, e.event_id, has = true, e.ts_s, e.event_id), None)
+      case _ => (applied, None)
     }
+  }
+
+  /** Keyed by user, in (ts_s, event_id) order; only users who have
+    * clicked keep state — at scale, state size is |clickers|, not
+    * |users seen|. */
+  val fsm = new KeyedFsm[Long, SeqEvent, AttrState, AttrOut](
+    "user_id", _.user_id,
+    Seq("ts_s", "event_id"), Ordering.by(e => (e.ts_s, e.event_id)),
+    empty, advance,
+    keep = _.has)(
+    Encoders.product[AttrState])
 
   def trackStream(ds: Dataset[SeqEvent]): Dataset[AttrOut] = {
     import ds.sparkSession.implicits._
-    ds.withColumn("eventTime", timestamp_seconds(col("ts_s")))
-      .withWatermark("eventTime", "0 seconds")
-      .as[SeqEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[AttrState, AttrOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (_: Long, events: Iterator[SeqEvent], state: GroupState[AttrState]) =>
-          var st = state.getOption.getOrElse(empty)
-          val sorted = events.toSeq.sortBy(e => (e.ts_s, e.event_id))
-          if (state.exists) sorted.headOption
-            .filter(e => e.ts_s < st.lastTs ||
-              (e.ts_s == st.lastTs && e.event_id < st.lastId))
-            .foreach { e =>
-              throw new IllegalStateException(
-                s"out-of-order cross-batch event for user ${e.user_id}: " +
-                  s"(${e.ts_s}, ${e.event_id}) arrived after " +
-                  s"(${st.lastTs}, ${st.lastId}) was applied — " +
-                  "AttributionTracker requires in-order delivery across " +
-                  "micro-batches (the SequenceTracker-family contract)")
-            }
-          val outs = sorted.flatMap { e =>
-            val (next, out) = advance(st, e)
-            st = next
-            out
-          }
-          sorted.lastOption.foreach(e =>
-            st = st.copy(lastTs = e.ts_s, lastId = e.event_id))
-          // only users who have clicked carry state — at scale, state
-          // size is |clickers|, not |users seen|
-          if (st.has || state.exists) state.update(st)
-          outs.iterator
-      }
+    fsm.stream(ds, Some(timestamp_seconds(col("ts_s"))))
   }
 }

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.core.KeyedFsm
 
 /**
  * Streaming face of the decline-trend composite (reference: arch
@@ -26,34 +27,30 @@ object DeclineTrend {
   /** ValueState analog: previous window's total + its decline flag. */
   final case class TrendState(prevTotal: Double, prevDeclined: Boolean)
 
+  /** No previous window: every comparison with a NaN total is false,
+    * so the first window neither declines nor fires. */
+  val Start: TrendState = TrendState(Double.NaN, prevDeclined = false)
+
   /** Emitted when the current window is the second consecutive drop. */
   final case class Trigger(
       day_s: Long, event_type: String, day_total: Double,
       prev_total: Double, declines_in_row: Long)
 
   /** Pure per-window step: (state, window) → (state', trigger?). */
-  def step(state: Option[TrendState], key: String, windowStartS: Long,
-           total: Double): (TrendState, Option[Trigger]) = {
-    val declined = state.exists(s => total < s.prevTotal)
-    val fire = declined && state.exists(_.prevDeclined)
+  def step(s: TrendState, w: WindowTotal): (TrendState, Option[Trigger]) = {
+    val declined = w.total < s.prevTotal
     val out =
-      if (fire) Some(Trigger(windowStartS, key, total, state.get.prevTotal, 2L))
+      if (declined && s.prevDeclined) Some(Trigger(w.window_start_s, w.key, w.total, s.prevTotal, 2L))
       else None
-    (TrendState(total, declined), out)
+    (TrendState(w.total, declined), out)
   }
 
-  /** Replay one key's time-sorted window totals. */
-  def runKey(key: String, sorted: Iterator[(Long, Double)],
-             initial: Option[TrendState] = None): (Option[TrendState], Seq[Trigger]) = {
-    var s = initial
-    val out = Seq.newBuilder[Trigger]
-    sorted.foreach { case (ws, total) =>
-      val (s2, trig) = step(s, key, ws, total)
-      s = Some(s2)
-      trig.foreach(out += _)
-    }
-    (s, out.result())
-  }
+  /** Keyed by the aggregation key, in window order. */
+  val fsm = new KeyedFsm[String, WindowTotal, TrendState, Trigger](
+    "key", _.key,
+    Seq("window_start_s"), Ordering.by(_.window_start_s),
+    Start, step)(
+    Encoders.product[TrendState])
 
   /** FSM-only face, no watermark of its own: use this downstream of a
     * watermarked windowed aggregation (the agg emits a window exactly
@@ -62,20 +59,7 @@ object DeclineTrend {
     * closed window as late and drop it). */
   def trendOnTotals(totals: Dataset[WindowTotal]): Dataset[Trigger] = {
     import totals.sparkSession.implicits._
-    totals
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[TrendState, Trigger](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[WindowTotal], state: GroupState[TrendState]) =>
-          if (it.isEmpty) Iterator.empty
-          else {
-            val sorted = it.toVector.sortBy(_.window_start_s)
-            val (s, trigs) = runKey(key,
-              sorted.iterator.map(w => (w.window_start_s, w.total)), state.getOption)
-            s.foreach(state.update)
-            trigs.iterator
-          }
-      }
+    fsm.stream(totals, None)
   }
 
   /** Streaming face for raw per-window totals fed directly (e.g. from
@@ -83,11 +67,7 @@ object DeclineTrend {
     * windows are dropped, the T6 policy — then the FSM. */
   def trendStream(totals: Dataset[WindowTotal]): Dataset[Trigger] = {
     import totals.sparkSession.implicits._
-    trendOnTotals(
-      totals
-        .withColumn("eventTime", timestamp_seconds(col("window_start_s")))
-        .withWatermark("eventTime", "0 seconds")
-        .as[WindowTotal])
+    fsm.stream(totals, Some(timestamp_seconds(col("window_start_s"))))
   }
 
   /** The reference's full topology in ONE streaming query — windowed

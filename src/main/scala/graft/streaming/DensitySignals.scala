@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.core.{Domain, SecondarySort}
+import graft.core.{Domain, KeyedFsm}
 import graft.sources.Tables
 
 /**
@@ -22,8 +21,8 @@ import graft.sources.Tables
  * (T9/F13).
  *
  * Scale: state per key is bounded by the time window (pruned on every
- * event), the stream shuffles once on the key, and the batch face is
- * the same pure fold — one shuffle, sorted within key, no global sort.
+ * event); both faces of [[fsm]] shuffle once on the key and sort
+ * within it, with no global sort.
  */
 object DensitySignals {
 
@@ -39,7 +38,7 @@ object DensitySignals {
       baseline: Double, n: Long, signal_id: String)
 
   /** Trailing-window sample buffer carried across micro-batches. */
-  final case class DensityState(samples: Seq[(Long, Double)])
+  final case class DensityState(samples: Vector[(Long, Double)])
 
   /** Streaming input record (named fields so the watermark column can
     * ride alongside without breaking the deserializer). */
@@ -51,58 +50,43 @@ object DensitySignals {
     * RANGE … 1 PRECEDING frame). Decimal-exact summation (valueOf:
     * shortest decimal repr of the double, identical to DuckDB's
     * DECIMAL(18,6) cast for ≤6-dp inputs). */
-  def step(buffer: Vector[(Long, Double)], userId: Long, tsMs: Long, eventId: Long,
-           value: Double): (Vector[(Long, Double)], Option[Signal]) = {
-    val pruned = buffer.dropWhile(_._1 < tsMs - WindowMs)
-    val window = pruned.filter(_._1 < tsMs)
+  def step(s: DensityState, e: DsEvent): (DensityState, Option[Signal]) = {
+    val pruned = s.samples.dropWhile(_._1 < e.ts_ms - WindowMs)
+    val window = pruned.filter(_._1 < e.ts_ms)
     val n = window.size
     val out =
       if (n >= MinSamples) {
-        val sum = window.foldLeft(java.math.BigDecimal.ZERO) { (acc, s) =>
-          acc.add(java.math.BigDecimal.valueOf(s._2))
+        val sum = window.foldLeft(java.math.BigDecimal.ZERO) { (acc, sample) =>
+          acc.add(java.math.BigDecimal.valueOf(sample._2))
         }
         val baseline = sum.doubleValue / n
-        if (baseline > 0 && value < DropFactor * baseline)
-          Some(Signal(userId, eventId, tsMs, value, baseline, n.toLong,
-            Domain.deterministicSignalId(userId.toString, Side, Reason, tsMs)))
+        if (baseline > 0 && e.value < DropFactor * baseline)
+          Some(Signal(e.user_id, e.event_id, e.ts_ms, e.value, baseline, n.toLong,
+            Domain.deterministicSignalId(e.user_id.toString, Side, Reason, e.ts_ms)))
         else None
       } else None
-    (pruned :+ ((tsMs, value)), out)
+    (DensityState(pruned :+ ((e.ts_ms, e.value))), out)
   }
 
-  /** Replay one key's time-sorted events through the buffer FSM. */
-  def runKey(userId: Long, sorted: Iterator[(Long, Long, Double)],
-             initial: Vector[(Long, Double)] = Vector.empty): (Vector[(Long, Double)], Seq[Signal]) = {
-    var buf = initial
-    val out = Seq.newBuilder[Signal]
-    sorted.foreach { case (tsMs, eventId, value) =>
-      val (b2, sig) = step(buf, userId, tsMs, eventId, value)
-      buf = b2
-      sig.foreach(out += _)
-    }
-    (buf, out.result())
-  }
+  /** Keyed by user, in (ts_ms, event_id) order; a key's buffer expires
+    * one window after its last sample. Kryo-stored: a product encoder
+    * over the sample `Vector` generates new deserializer source at every
+    * resolution, so each micro-batch compiled it again. */
+  val fsm = new KeyedFsm[Long, DsEvent, DensityState, Signal](
+    "user_id", _.user_id,
+    Seq("ts_ms", "event_id"), Ordering.by(e => (e.ts_ms, e.event_id)),
+    DensityState(Vector.empty), step,
+    keep = _.samples.nonEmpty,
+    timer = Some(KeyedFsm.Timer(_.samples.lastOption.map(_._1 + WindowMs),
+      (_, _) => (DensityState(Vector.empty), None))))(
+    Encoders.kryo[DensityState])
 
-  /** Batch face over the events table (oracle-checked). Spillable
-    * secondary sort + iterator FSM: the trailing-window buffer is the
-    * only per-key memory; a hot user's history never materializes. */
+  /** Batch face over the events table (oracle-checked). */
   def qDensitySignals(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.events(spark, dir)
+    fsm.replay(Tables.events(spark, dir)
       .select($"user_id", unix_millis($"ts").as("ts_ms"), $"event_id", $"value")
-      .as[(Long, Long, Long, Double)]
-      .repartition($"user_id")
-      .sortWithinPartitions($"user_id", $"ts_ms", $"event_id")
-      .mapPartitions { it =>
-        SecondarySort.runs(it)(_._1).flatMap { case (user, events) =>
-          var buf = Vector.empty[(Long, Double)]
-          events.flatMap { case (_, ts, eid, value) =>
-            val (b2, sig) = step(buf, user, ts, eid, value)
-            buf = b2
-            sig
-          }
-        }
-      }
+      .as[DsEvent])
       .toDF()
       .orderBy($"user_id", $"event_id")
   }
@@ -125,32 +109,10 @@ object DensitySignals {
        |WHERE n >= $MinSamples AND sum_w / n > 0 AND value < $DropFactor * (sum_w / n)
        |ORDER BY user_id, event_id""".stripMargin
 
-  /** Streaming face: the same FSM with the buffer in the state store,
-    * carried across micro-batches; stale keys expire one window after
-    * their last event via event-time timeout. */
+  /** Streaming face: the buffer lives in the state store, watermarked
+    * on the event time. */
   def detectStream(events: Dataset[DsEvent]): Dataset[Signal] = {
     import events.sparkSession.implicits._
-    events
-      .withColumn("eventTime", timestamp_millis(col("ts_ms")))
-      .withWatermark("eventTime", "0 seconds")
-      .as[DsEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[DensityState, Signal](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, it: Iterator[DsEvent], state: GroupState[DensityState]) =>
-          if (it.isEmpty) {
-            if (state.hasTimedOut) state.remove()
-            Iterator.empty
-          } else {
-            val prior = state.getOption.map(_.samples.toVector).getOrElse(Vector.empty)
-            val sorted = it.toVector.sortBy(e => (e.ts_ms, e.event_id))
-            val (buf, signals) =
-              runKey(user, sorted.iterator.map(e => (e.ts_ms, e.event_id, e.value)), prior)
-            state.update(DensityState(buf))
-            if (buf.nonEmpty) state.setTimeoutTimestamp(
-              math.max(buf.last._1 + WindowMs, state.getCurrentWatermarkMs() + 1))
-            signals.iterator
-          }
-      }
+    fsm.stream(events, Some(timestamp_millis(col("ts_ms"))))
   }
 }

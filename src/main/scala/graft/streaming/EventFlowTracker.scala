@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.functions.{col, timestamp_seconds}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.core.KeyedFsm
 import SequenceTracker.SeqEvent
 
 /**
@@ -39,43 +39,31 @@ object EventFlowTracker {
   val empty: FlowState = FlowState(0L, 0L, "", has = false)
 
   /** One in-order step: emit the (prev → current) transition, then
-    * remember the current event. */
+    * remember the current event. An event behind the remembered one is
+    * a cross-batch regression, and the step throws. */
   def advance(st: FlowState, e: SeqEvent): (FlowState, Option[Transition]) = {
+    if (st.has && (e.ts_s < st.ts || (e.ts_s == st.ts && e.event_id < st.id)))
+      throw new IllegalStateException(
+        s"out-of-order cross-batch event for user ${e.user_id}: " +
+          s"(${e.ts_s}, ${e.event_id}) arrived after " +
+          s"(${st.ts}, ${st.id}) was applied — EventFlowTracker " +
+          "requires in-order delivery across micro-batches " +
+          "(the SequenceTracker-family contract)")
     val out =
       if (st.has) Some(Transition(e.user_id, st.tpe, e.event_type, st.ts))
       else None
     (FlowState(e.ts_s, e.event_id, e.event_type, has = true), out)
   }
 
+  /** Keyed by user, in (ts_s, event_id) order. */
+  val fsm = new KeyedFsm[Long, SeqEvent, FlowState, Transition](
+    "user_id", _.user_id,
+    Seq("ts_s", "event_id"), Ordering.by(e => (e.ts_s, e.event_id)),
+    empty, advance)(
+    Encoders.product[FlowState])
+
   def trackStream(ds: Dataset[SeqEvent]): Dataset[Transition] = {
     import ds.sparkSession.implicits._
-    ds.withColumn("eventTime", timestamp_seconds(col("ts_s")))
-      .withWatermark("eventTime", "0 seconds")
-      .as[SeqEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FlowState, Transition](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (_: Long, events: Iterator[SeqEvent], state: GroupState[FlowState]) =>
-          var st = state.getOption.getOrElse(empty)
-          val sorted = events.toSeq.sortBy(e => (e.ts_s, e.event_id))
-          if (st.has) sorted.headOption
-            .filter(e => e.ts_s < st.ts ||
-              (e.ts_s == st.ts && e.event_id < st.id))
-            .foreach { e =>
-              throw new IllegalStateException(
-                s"out-of-order cross-batch event for user ${e.user_id}: " +
-                  s"(${e.ts_s}, ${e.event_id}) arrived after " +
-                  s"(${st.ts}, ${st.id}) was applied — EventFlowTracker " +
-                  "requires in-order delivery across micro-batches " +
-                  "(the SequenceTracker-family contract)")
-            }
-          val outs = sorted.flatMap { e =>
-            val (next, out) = advance(st, e)
-            st = next
-            out
-          }
-          state.update(st)
-          outs.iterator
-      }
+    fsm.stream(ds, Some(timestamp_seconds(col("ts_s"))))
   }
 }

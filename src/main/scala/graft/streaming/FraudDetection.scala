@@ -1,11 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.core.KeyedFsm
 import graft.core.Model.{Alert, FraudState, Transaction}
-import graft.core.SecondarySort
 import graft.sources.Tables
 
 /**
@@ -15,17 +14,12 @@ import graft.sources.Tables
  * input job.py:33-56; golden output docs/fraud_detection_guide.md:85-100
  * — alerts for accounts 3, 4, 3 at $600/$500/$999).
  *
- * Three layers, sharing one FSM:
- *  - [[step]] — the pure per-event transition (no Spark imports in its
- *    logic; mirrors the reference's framework-free purity rule).
- *  - [[detectBatch]] — bounded replay: repartition by account +
- *    spillable sortWithinPartitions + iterator FSM. The shuffle
- *    carries raw events hash-partitioned by account — the Spark
- *    encoding of Flink's `key_by`; state for one key never crosses
- *    executors, and no key's history is ever materialized in memory.
- *  - [[detectStream]] — `flatMapGroupsWithState` with event-time
- *    timeout: the streaming twin, state persisted across micro-batches
- *    and expired by the watermark clock.
+ * One [[fsm]] declaration over the pure [[step]] (no Spark imports in
+ * its logic; mirrors the reference's framework-free purity rule) gives
+ * the three faces: [[detectBatch]] is its spillable replay, keyed by
+ * account (the Spark encoding of Flink's `key_by`), and
+ * [[detectStream]] its stream face, whose event-time timer drops an
+ * expired flag from the state store once the watermark passes it.
  *
  * Timer-semantics note (deliberate divergence, SURVEY §7 "what's
  * hard"): Flink fires the expiry timer when the *watermark* passes
@@ -62,82 +56,29 @@ object FraudDetection {
     }
   }
 
-  /** Replay a time-sorted event sequence of one key through the FSM. */
-  def runKey(accountId: Long, sorted: Iterator[(Long, Double)],
-             state: FraudState = Empty,
-             small: Double = SmallAmount, large: Double = LargeAmount,
-             windowMs: Long = WindowMs): (FraudState, Seq[Alert]) = {
-    var s = state
-    val out = Seq.newBuilder[Alert]
-    sorted.foreach { case (ts, amount) =>
-      val (s2, alert) = step(s, accountId, ts, amount, small, large, windowMs)
-      s = s2
-      alert.foreach(out += _)
-    }
-    (s, out.result())
-  }
+  /** Keyed by account, in (timestamp, amount) order; a state is kept
+    * while its small-txn flag is set, until the flag's timer. A flag
+    * past its timer is already expired in [[step]], so when the runner
+    * defers a timer behind the watermark, no spurious alert can fire
+    * meanwhile. */
+  val fsm = new KeyedFsm[Long, Transaction, FraudState, Alert](
+    "accountId", _.accountId,
+    Seq("timestamp", "amount"), Ordering.by(t => (t.timestamp, t.amount)),
+    Empty, (s, t) => step(s, t.accountId, t.timestamp, t.amount),
+    keep = _.smallSeen,
+    timer = Some(KeyedFsm.Timer(s => Some(s.timerTs), (_, _) => (Empty, None))))(
+    Encoders.product[FraudState])
 
-  /** Bounded (batch) fraud detection over a typed transaction Dataset.
-    * Spillable secondary sort: one shuffle on the key, external sort
-    * within partitions, then an iterator-driven FSM — a hot account
-    * streams through in O(state) memory instead of materializing its
-    * whole history in a per-key Vector. */
+  /** Bounded (batch) fraud detection over a typed transaction Dataset. */
   def detectBatch(txns: Dataset[Transaction]): Dataset[Alert] = {
     import txns.sparkSession.implicits._
-    txns
-      .repartition(col("accountId"))
-      .sortWithinPartitions(col("accountId"), col("timestamp"), col("amount"))
-      .mapPartitions { it =>
-        SecondarySort.runs(it)(_.accountId).flatMap { case (acct, events) =>
-          var s = Empty
-          events.flatMap { t =>
-            val (s2, alert) = step(s, acct, t.timestamp, t.amount)
-            s = s2
-            alert
-          }
-        }
-      }
+    fsm.replay(txns)
   }
 
-  /**
-   * Streaming fraud detection: state lives in the state store keyed by
-   * account, carried across micro-batches; the event-time timeout
-   * (watermark-driven) clears expired flags between batches exactly as
-   * the in-band timer check does within a batch.
-   */
+  /** Streaming fraud detection, watermarked on the transaction time. */
   def detectStream(txns: Dataset[Transaction]): Dataset[Alert] = {
     import txns.sparkSession.implicits._
-    txns
-      .withColumn("eventTime", timestamp_millis(col("timestamp")))
-      .withWatermark("eventTime", "0 seconds")
-      .as[Transaction]
-      .groupByKey(_.accountId)
-      .flatMapGroupsWithState[FraudState, Alert](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (acct: Long, it: Iterator[Transaction], state: GroupState[FraudState]) =>
-          val prior = state.getOption.getOrElse(Empty)
-          if (it.isEmpty) {
-            // woken by timeout: the flag's timer has passed the watermark
-            if (state.hasTimedOut) state.remove()
-            Iterator.empty
-          } else {
-            val sorted = it.toVector.sortBy(t => (t.timestamp, t.amount))
-            val (s, alerts) =
-              runKey(acct, sorted.iterator.map(t => (t.timestamp, t.amount)), prior)
-            if (s.smallSeen) {
-              // setTimeoutTimestamp throws if the ts is not strictly
-              // ahead of the watermark (cross-key event-time skew can
-              // put timerTs behind it); clamping just defers the state
-              // drop to the next watermark advance — the in-band
-              // ts >= timerTs check in step() already treats the flag
-              // as expired, so no spurious alert can fire meanwhile.
-              state.update(s)
-              state.setTimeoutTimestamp(
-                math.max(s.timerTs, state.getCurrentWatermarkMs() + 1))
-            } else state.remove()
-            alerts.iterator
-          }
-      }
+    fsm.stream(txns, Some(timestamp_millis(col("timestamp"))))
   }
 
   /** The reference's canonical 12-transaction input (job.py:33-56). */
@@ -167,21 +108,15 @@ object FraudDetection {
 
   def qFraudAlerts(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.events(spark, dir)
+    val events = new KeyedFsm[Long, (Long, Long, Long, Double), FraudState, (Long, Long, Double, Long)](
+      "user_id", _._1, Seq("ts_ms", "event_id"), Ordering.by(e => (e._2, e._3)),
+      Empty, { case (s, (user, ts, eid, value)) =>
+        val (next, alert) = step(s, user, ts, value, EvSmall, EvLarge, EvWindowMs)
+        (next, alert.map(_ => (user, eid, value, ts)))
+      })
+    events.replay(Tables.events(spark, dir)
       .select($"user_id", unix_millis($"ts").as("ts_ms"), $"event_id", $"value")
-      .as[(Long, Long, Long, Double)]
-      .repartition($"user_id")
-      .sortWithinPartitions($"user_id", $"ts_ms", $"event_id")
-      .mapPartitions { it =>
-        SecondarySort.runs(it)(_._1).flatMap { case (user, events) =>
-          var s = Empty
-          events.flatMap { case (_, ts, eid, value) =>
-            val (s2, alert) = step(s, user, ts, value, EvSmall, EvLarge, EvWindowMs)
-            s = s2
-            alert.map(_ => (user, eid, value, ts))
-          }
-        }
-      }
+      .as[(Long, Long, Long, Double)])
       .toDF("user_id", "event_id", "value", "alert_ts_ms")
       .orderBy($"user_id", $"event_id")
   }

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.core.KeyedFsm
 
 /**
  * Exactly-once signal ingestion: per-signal-id first-seen state with a
@@ -15,7 +16,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  * UNIQUE-within-window semantic) and emits deterministically (first
  * row by event time, not arrival order).
  *
- * The TTL is event-time bookkeeping inside `flatMapGroupsWithState`.
+ * The TTL is an event-time timer of a [[graft.core.KeyedFsm]].
  * Spark 4's `transformWithState` TTL (`TTLConfig`) is processing-time:
  * it schedules a micro-batch on every trigger, so a query never goes
  * idle, and it does not replay deterministically, where event-time TTL
@@ -28,46 +29,34 @@ object IdempotentDedup {
   /** first-seen event time per id (cleared by timeout after the TTL). */
   final case class SeenState(firstSeenMs: Long)
 
+  /** An id with no live first sighting. */
+  val Unseen: SeenState = SeenState(Long.MinValue)
+
   val TtlMs = 30000L
+
+  /** Keyed by signal id, in (ts_ms, value) order. The fold re-admits
+    * (and resets firstSeen) every time the gap reaches the TTL, so one
+    * big batch emits exactly what the same rows split across many
+    * micro-batches would (batch-boundary-free determinism; a single
+    * re-admission per batch would not be). The TTL's timer makes the id
+    * re-admissible once the watermark passes it. */
+  def fsm(ttlMs: Long): KeyedFsm[String, SignalRow, SeenState, SignalRow] =
+    new KeyedFsm[String, SignalRow, SeenState, SignalRow](
+      "signal_id", _.signal_id,
+      Seq("ts_ms", "value"), Ordering.by(r => (r.ts_ms, r.value)),
+      Unseen,
+      (s, r) =>
+        if (s == Unseen || r.ts_ms - s.firstSeenMs >= ttlMs) (SeenState(r.ts_ms), Some(r))
+        else (s, None),
+      keep = _ != Unseen,
+      timer = Some(KeyedFsm.Timer(s => Some(s.firstSeenMs + ttlMs), (_, _) => (Unseen, None))))(
+      Encoders.product[SeenState])
 
   /** Emits only the first row (by event time) per signal id; duplicates
     * within `ttlMs` are dropped; after expiry the id is re-admitted. */
   def dedupStream(rows: Dataset[SignalRow], ttlMs: Long = TtlMs): Dataset[SignalRow] = {
     import rows.sparkSession.implicits._
-    rows
-      .withColumn("eventTime", timestamp_millis(col("ts_ms")))
-      .withWatermark("eventTime", "0 seconds")
-      .as[SignalRow]
-      .groupByKey(_.signal_id)
-      .flatMapGroupsWithState[SeenState, SignalRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: String, it: Iterator[SignalRow], state: GroupState[SeenState]) =>
-          if (it.isEmpty) {
-            if (state.hasTimedOut) state.remove() // TTL lapsed: id re-admissible
-            Iterator.empty
-          } else {
-            // Fold over the batch in event-time order, re-admitting (and
-            // resetting firstSeen) every time the gap reaches the TTL —
-            // so one big batch emits exactly what the same rows split
-            // across many micro-batches would (batch-boundary-free
-            // determinism; a single re-admission per batch would not be).
-            val sorted = it.toVector.sortBy(r => (r.ts_ms, r.value))
-            val out = Vector.newBuilder[SignalRow]
-            var firstSeen = state.getOption.map(_.firstSeenMs)
-            sorted.foreach { r =>
-              if (firstSeen.forall(f => r.ts_ms - f >= ttlMs)) {
-                firstSeen = Some(r.ts_ms)
-                out += r
-              }
-            }
-            firstSeen.foreach { f =>
-              state.update(SeenState(f))
-              state.setTimeoutTimestamp(
-                math.max(f + ttlMs, state.getCurrentWatermarkMs() + 1))
-            }
-            out.result().iterator
-          }
-      }
+    fsm(ttlMs).stream(rows, Some(timestamp_millis(col("ts_ms"))))
   }
 
   /** The BUILT-IN declarative variant for the common case: native

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.core.{Domain, SecondarySort}
+import graft.core.{Domain, KeyedFsm}
 import graft.sources.Tables
 
 /**
@@ -16,9 +15,9 @@ import graft.sources.Tables
  * defense + pending state machine).
  *
  * Encoded Spark-first as SURVEY §2.5 J1 prescribes: the four streams
- * become one tagged union keyed by code, processed by a single
- * `flatMapGroupsWithState` handler over a pure FSM. Rules, in the
- * reference's own priority order:
+ * become one tagged union keyed by code, folded by one [[fsm]]
+ * declaration over the pure [[step]]. Rules, in the reference's own
+ * priority order:
  *
  *  - BUY signal: rejected if the reason already has an active position
  *    (dup guard) or was removed within the TTL window (re-entry
@@ -182,60 +181,27 @@ object PositionTracker {
     (s, out.result())
   }
 
-  /** Replay one key's time-sorted commands. */
-  def runKey(sorted: Iterator[Command], initial: TrackerState = EmptyState): (TrackerState, Seq[PositionEvent]) = {
-    var s = initial
-    val out = Seq.newBuilder[PositionEvent]
-    sorted.foreach { c =>
-      val (s2, evs) = step(s, c)
-      s = s2
-      out ++= evs
-    }
-    (s, out.result())
-  }
+  /** Keyed by market, in (ts_ms, seq) order; a key's state is kept
+    * while it holds a position or a TTL entry. Kryo-stored: a product
+    * encoder over the state's maps generates new deserializer source at
+    * every resolution, so each micro-batch compiled it again. */
+  val fsm = new KeyedFsm[String, Command, TrackerState, PositionEvent](
+    "code", _.code,
+    Seq("ts_ms", "seq"), Ordering.by(c => (c.ts_ms, c.seq)),
+    EmptyState, step,
+    keep = s => s.active.nonEmpty || s.recentlyRemoved.nonEmpty)(
+    Encoders.kryo[TrackerState])
 
-  /** Batch face over a command Dataset (deterministic replay).
-    * Spillable secondary sort + iterator FSM: per-key memory is the
-    * tracker state only; events emit as the fold advances, so a hot
-    * market's command history is never materialized. */
+  /** Batch face over a command Dataset (deterministic replay). */
   def trackBatch(commands: Dataset[Command]): Dataset[PositionEvent] = {
     import commands.sparkSession.implicits._
-    commands
-      .repartition(col("code"))
-      .sortWithinPartitions(col("code"), col("ts_ms"), col("seq"))
-      .mapPartitions { it =>
-        SecondarySort.runs(it)(_.code).flatMap { case (_, cmds) =>
-          var s = EmptyState
-          cmds.flatMap { c =>
-            val (s2, evs) = step(s, c)
-            s = s2
-            evs
-          }
-        }
-      }
+    fsm.replay(commands)
   }
 
-  /** Streaming face: same FSM, state in the store, keyed by code. */
+  /** Streaming face, watermarked on the command time. */
   def trackStream(commands: Dataset[Command]): Dataset[PositionEvent] = {
     import commands.sparkSession.implicits._
-    commands
-      .withColumn("eventTime", timestamp_millis(col("ts_ms")))
-      .withWatermark("eventTime", "0 seconds")
-      .as[Command]
-      .groupByKey(_.code)
-      .flatMapGroupsWithState[TrackerState, PositionEvent](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, it: Iterator[Command], state: GroupState[TrackerState]) =>
-          if (it.isEmpty) Iterator.empty
-          else {
-            val (s, evs) = runKey(
-              it.toVector.sortBy(c => (c.ts_ms, c.seq)).iterator,
-              state.getOption.getOrElse(EmptyState))
-            if (s.active.isEmpty && s.recentlyRemoved.isEmpty) state.remove()
-            else state.update(s)
-            evs.iterator
-          }
-      }
+    fsm.stream(commands, Some(timestamp_millis(col("ts_ms"))))
   }
 
   // ------------------------------------------------------------------

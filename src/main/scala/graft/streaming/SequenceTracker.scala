@@ -1,15 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.functions.{col, timestamp_seconds}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.core.KeyedFsm
 import graft.operators.EventWindows.FunnelStage
 
 /**
  * Streaming face of the generic N-stage sequence matcher
- * ([[graft.operators.EventWindows.sequenceMatch]]): a per-user FSM over
- * event-time-ordered micro-batches via `flatMapGroupsWithState` — the
+ * ([[graft.operators.EventWindows.sequenceMatch]]): a per-user
+ * [[graft.core.KeyedFsm]] over event-time-ordered micro-batches — the
  * CEP sequence-pattern shape the reference builds as a Flink
  * KeyedProcessFunction with keyed state and event-time timers
  * (reference signature pattern T1, fraud_detector.py:108-133; SURVEY
@@ -47,7 +47,9 @@ object SequenceTracker {
   case class SeqOut(user_id: Long, kind: String, stage: Long, ts_s: Long)
 
   /** Parallel (ts, event_id) of the stages matched so far, plus a flag
-    * dedup-ing the timer emission. O(stages) per key. */
+    * dedup-ing the timer emission. O(stages) per key. Kryo-stored: a
+    * product encoder over the `Seq` fields generates new deserializer
+    * source at every resolution, so each micro-batch compiled it again. */
   case class SeqState(ts: Seq[Long], ids: Seq[Long], abandonEmitted: Boolean)
 
   val empty: SeqState = SeqState(Nil, Nil, abandonEmitted = false)
@@ -98,54 +100,38 @@ object SequenceTracker {
     }
   }
 
+  /** Keyed by user, in (ts_s, event_id) order. Only users who matched
+    * stage 0 keep state (at scale, state size is |sequence starters|,
+    * not |users seen|). An incomplete sequence's timer is its stage-0
+    * anchor + the window; when the watermark passes it, the user emits
+    * one `abandon` with the stages reached AS OF the deadline (timers
+    * fire one micro-batch after the watermark passes, so an unbounded
+    * post-deadline stage may already sit in state; the batch twin
+    * counts t_stage <= deadline, and so must we). */
+  def fsm(stages: Seq[FunnelStage]): KeyedFsm[Long, SeqEvent, SeqState, SeqOut] = {
+    val n = stages.length
+    val window = windowSecs(stages)
+    def open(st: SeqState): Boolean = st.ts.nonEmpty && st.ts.length < n && !st.abandonEmitted
+    new KeyedFsm[Long, SeqEvent, SeqState, SeqOut](
+      "user_id", _.user_id,
+      Seq("ts_s", "event_id"), Ordering.by(e => (e.ts_s, e.event_id)),
+      empty, advance(stages),
+      keep = _.ts.nonEmpty,
+      timer = Some(KeyedFsm.Timer(
+        st => if (open(st)) Some((st.ts.head + window) * 1000L) else None,
+        (user, st) =>
+          if (!open(st)) (st, None)
+          else {
+            val deadline = st.ts.head + window
+            (st.copy(abandonEmitted = true),
+              Some(SeqOut(user, "abandon", st.ts.count(_ <= deadline).toLong, deadline)))
+          })))(
+      Encoders.kryo[SeqState])
+  }
+
   def trackStream(stages: Seq[FunnelStage])(
       ds: Dataset[SeqEvent]): Dataset[SeqOut] = {
     import ds.sparkSession.implicits._
-    val n = stages.length
-    val window = windowSecs(stages)
-    ds.withColumn("eventTime", timestamp_seconds(col("ts_s")))
-      .withWatermark("eventTime", "0 seconds")
-      .as[SeqEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SeqState, SeqOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, events: Iterator[SeqEvent], state: GroupState[SeqState]) =>
-          var st = state.getOption.getOrElse(empty)
-          if (state.hasTimedOut) {
-            // the watermark passed the registered deadline with the
-            // sequence incomplete — the timer face of the matcher.
-            // Stages are counted AS OF the deadline (timers fire one
-            // micro-batch after the watermark passes, so an unbounded
-            // post-deadline stage may already sit in state; the batch
-            // twin counts t_stage <= deadline, and so must we).
-            if (st.ts.nonEmpty && st.ts.length < n && !st.abandonEmitted) {
-              st = st.copy(abandonEmitted = true)
-              state.update(st)
-              val deadline = st.ts.head + window
-              Iterator.single(
-                SeqOut(user, "abandon", st.ts.count(_ <= deadline).toLong, deadline))
-            } else Iterator.empty
-          } else {
-            val hits = events.toSeq.sortBy(e => (e.ts_s, e.event_id)).flatMap { e =>
-              val (next, hit) = advance(stages)(st, e)
-              st = next
-              hit
-            }
-            // never materialize state for users who haven't matched
-            // stage 0 — at scale, state size is |sequence starters|,
-            // not |users seen|
-            if (st.ts.nonEmpty || state.exists) state.update(st)
-            if (st.ts.nonEmpty && st.ts.length < n && !st.abandonEmitted) {
-              // setTimeoutTimestamp throws if the ts is not strictly
-              // ahead of the watermark; clamping just defers the timer
-              // to the next watermark advance (the verdict at firing
-              // time is unchanged — the deadline already passed).
-              val deadlineMs = (st.ts.head + window) * 1000L
-              state.setTimeoutTimestamp(
-                math.max(deadlineMs, state.getCurrentWatermarkMs() + 1))
-            }
-            hits.iterator
-          }
-      }
+    fsm(stages).stream(ds, Some(timestamp_seconds(col("ts_s"))))
   }
 }

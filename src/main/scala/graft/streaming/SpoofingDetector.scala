@@ -2,9 +2,14 @@ package graft.streaming
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import scala.reflect.classTag
+
+import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.catalyst.encoders.{Codec, ExpressionEncoder}
+import org.apache.spark.sql.catalyst.encoders.AgnosticEncoders.{TransformingEncoder, agnosticEncoderFor}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.core.KeyedFsm
 
 /**
  * Spoofing detection (reference: arch doc:583-592, 기획 doc:104-109;
@@ -13,10 +18,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  * timer fires and the level has vanished, the order was a spoof —
  * placed to fake depth and pulled before execution.
  *
- * Spark encoding per SURVEY: per-price deadlines live in a MapState
- * analog inside `flatMapGroupsWithState` keyed by market code; timers
- * are evaluated in event time against each incoming book, so batch
- * replay and live streams produce identical alerts.
+ * Per-price deadlines live in a MapState analog ([[SpoofState]]) keyed
+ * by market code; timers are evaluated in event time against each
+ * incoming book, so the batch replay and the stream face of [[fsm]]
+ * produce identical alerts.
  */
 object SpoofingDetector {
 
@@ -65,43 +70,28 @@ object SpoofingDetector {
     (SpoofState(armed, verified), alerts.result())
   }
 
-  def runKey(sorted: Iterator[Book], initial: SpoofState = Empty): (SpoofState, Seq[SpoofAlert]) = {
-    var s = initial
-    val out = Seq.newBuilder[SpoofAlert]
-    sorted.foreach { b =>
-      val (s2, a) = step(s, b)
-      s = s2
-      out ++= a
-    }
-    (s, out.result())
-  }
+  /** Keyed by market, in (ts_ms, prices, sizes) order. (code, ts_ms)
+    * alone is not a total order: two frames of one market can share a
+    * timestamp, and the first sighting of a level fixes its registered
+    * size. Books that still tie are identical, so swapping them is a
+    * no-op for the fold. The arrays compare as Spark sorts them:
+    * element by element with -0.0 = 0.0 and NaN last, then by length. */
+  val fsm = new KeyedFsm[String, Book, SpoofState, SpoofAlert](
+    "code", _.code,
+    Seq("ts_ms", "prices", "sizes"), {
+      import Ordering.Implicits.seqOrdering
+      implicit val sparkDouble: Ordering[Double] = (x, y) => if (x == y) 0 else java.lang.Double.compare(x, y)
+      Ordering.by(b => (b.ts_ms, b.prices, b.sizes))
+    },
+    Empty, step,
+    keep = s => s.armed.nonEmpty || s.verified.nonEmpty)(
+    ExpressionEncoder(TransformingEncoder(
+      classTag[SpoofState], agnosticEncoderFor(Encoders.product[StoredState]), () => Packed)))
 
-  /** Batch replay over a book Dataset. Spillable secondary sort +
-    * iterator FSM (the qDensitySignals discipline): one shuffle on the
-    * market code, external sort within partitions, and the fold holds
-    * only the armed/verified maps — a market's full book history never
-    * materializes on one executor thread. */
+  /** Batch replay over a book Dataset. */
   def detectBatch(books: Dataset[Book]): Dataset[SpoofAlert] = {
     import books.sparkSession.implicits._
-    books
-      .repartition(col("code"))
-      // (code, ts_ms) alone is not a total order: two frames of one
-      // market could share a max event timestamp and the FSM fold is
-      // order-sensitive. Tiebreak on the book content itself (array
-      // ordering is lexicographic) — books that still tie are
-      // identical, and swapping identical adjacent inputs is a no-op
-      // for the fold, so replay order is deterministic.
-      .sortWithinPartitions(col("code"), col("ts_ms"), col("prices"), col("sizes"))
-      .mapPartitions { it =>
-        graft.core.SecondarySort.runs(it)(_.code).flatMap { case (_, bs) =>
-          var s = Empty
-          bs.flatMap { b =>
-            val (s2, a) = step(s, b)
-            s = s2
-            a
-          }
-        }
-      }
+    fsm.replay(books)
   }
 
   // ==================================================================
@@ -225,24 +215,11 @@ object SpoofingDetector {
     * numbered from a global counter, so the fresh resolution of the
     * state encoder in each micro-batch generated new source and one
     * more Janino compile. */
-  final case class StoredState(armed: Array[Byte], verified: Array[Byte]) {
-    def toSpoofState: SpoofState = {
-      val a = ByteBuffer.wrap(armed)
-      val levels = Map.newBuilder[Double, (Double, Long)]
-      while (a.hasRemaining) {
-        val price = a.getDouble
-        val size = a.getDouble
-        levels += price -> ((size, a.getLong))
-      }
-      val v = ByteBuffer.wrap(verified)
-      val prices = Set.newBuilder[Double]
-      while (v.hasRemaining) prices += v.getDouble
-      SpoofState(levels.result(), prices.result())
-    }
-  }
+  final case class StoredState(armed: Array[Byte], verified: Array[Byte])
 
-  object StoredState {
-    def of(s: SpoofState): StoredState = {
+  /** The stream face's state codec, [[SpoofState]] ↔ [[StoredState]]. */
+  private object Packed extends Codec[SpoofState, StoredState] {
+    def encode(s: SpoofState): StoredState = {
       val a = ByteBuffer.allocate(24 * s.armed.size)
       s.armed.toSeq.sortBy(_._1).foreach { case (price, (size, deadline)) =>
         a.putDouble(price).putDouble(size).putLong(deadline)
@@ -251,28 +228,25 @@ object SpoofingDetector {
       s.verified.toSeq.sorted.foreach(v.putDouble)
       StoredState(a.array, v.array)
     }
+
+    def decode(stored: StoredState): SpoofState = {
+      val a = ByteBuffer.wrap(stored.armed)
+      val levels = Map.newBuilder[Double, (Double, Long)]
+      while (a.hasRemaining) {
+        val price = a.getDouble
+        val size = a.getDouble
+        levels += price -> ((size, a.getLong))
+      }
+      val v = ByteBuffer.wrap(stored.verified)
+      val prices = Set.newBuilder[Double]
+      while (v.hasRemaining) prices += v.getDouble
+      SpoofState(levels.result(), prices.result())
+    }
   }
 
-  val stateEncoder: Encoder[StoredState] = Encoders.product[StoredState]
-
-  /** Streaming face, state carried across micro-batches. */
+  /** Streaming face, watermarked on the book time. */
   def detectStream(books: Dataset[Book]): Dataset[SpoofAlert] = {
     import books.sparkSession.implicits._
-    books
-      .withColumn("eventTime", timestamp_millis(col("ts_ms")))
-      .withWatermark("eventTime", "0 seconds")
-      .as[Book]
-      .groupByKey(_.code)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, it: Iterator[Book], state: GroupState[StoredState]) =>
-          if (it.isEmpty) Iterator.empty
-          else {
-            val (s, alerts) = runKey(it.toVector.sortBy(_.ts_ms).iterator,
-              state.getOption.fold(Empty)(_.toSpoofState))
-            if (s.armed.isEmpty && s.verified.isEmpty) state.remove()
-            else state.update(StoredState.of(s))
-            alerts.iterator
-          }
-      }(stateEncoder, implicitly[Encoder[SpoofAlert]])
+    fsm.stream(books, Some(timestamp_millis(col("ts_ms"))))
   }
 }

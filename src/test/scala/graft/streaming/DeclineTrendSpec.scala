@@ -12,21 +12,24 @@ class DeclineTrendSpec extends SparkSpec {
 
   test("pure FSM: fires on the 2nd consecutive drop, not the 1st, re-arms after a rise") {
     // 100, 90 (1st drop), 80 (2nd -> fire), 85 (rise), 70 (1st), 60 (2nd -> fire)
-    val (_, trigs) = runKey("k",
-      Iterator((0L, 100.0), (1L, 90.0), (2L, 80.0), (3L, 85.0), (4L, 70.0), (5L, 60.0)))
+    val (_, trigs) = fsm.run(Start,
+      Iterator((0L, 100.0), (1L, 90.0), (2L, 80.0), (3L, 85.0), (4L, 70.0), (5L, 60.0))
+        .map { case (w, t) => WindowTotal("k", w, t) })
     assert(trigs.map(t => (t.day_s, t.day_total)) == Seq((2L, 80.0), (5L, 60.0)))
     assert(trigs.forall(_.declines_in_row == 2L))
   }
 
   test("pure FSM: a continuing slide fires on every window after the 2nd") {
-    val (_, trigs) = runKey("k",
-      Iterator((0L, 100.0), (1L, 90.0), (2L, 80.0), (3L, 70.0), (4L, 60.0)))
+    val (_, trigs) = fsm.run(Start,
+      Iterator((0L, 100.0), (1L, 90.0), (2L, 80.0), (3L, 70.0), (4L, 60.0))
+        .map { case (w, t) => WindowTotal("k", w, t) })
     assert(trigs.map(_.day_s) == Seq(2L, 3L, 4L))
   }
 
   test("pure FSM: equal totals break the streak (a plateau is not a decline)") {
-    val (_, trigs) = runKey("k",
-      Iterator((0L, 100.0), (1L, 90.0), (2L, 90.0), (3L, 80.0)))
+    val (_, trigs) = fsm.run(Start,
+      Iterator((0L, 100.0), (1L, 90.0), (2L, 90.0), (3L, 80.0))
+        .map { case (w, t) => WindowTotal("k", w, t) })
     assert(trigs.isEmpty) // drop, plateau, drop — never two in a row
   }
 

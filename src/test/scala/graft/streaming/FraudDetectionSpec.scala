@@ -16,7 +16,7 @@ class FraudDetectionSpec extends SparkSpec {
   test("pure FSM: canonical input produces exactly the three golden alerts") {
     val byKey = canonicalTransactions.groupBy(_.accountId)
     val alerts = byKey.toSeq.flatMap { case (acct, txns) =>
-      runKey(acct, txns.sortBy(_.timestamp).iterator.map(t => (t.timestamp, t.amount)))._2
+      fsm.run(Empty, txns.sortBy(_.timestamp))._2
     }.sortBy(_.timestamp)
     assert(alerts.map(a => (a.accountId, a.amount)) ==
       Seq((3L, 600.00), (4L, 500.00), (3L, 999.00)))
@@ -24,22 +24,22 @@ class FraudDetectionSpec extends SparkSpec {
 
   test("pure FSM: flag expires at exactly +60s (timer boundary)") {
     // small at t0; large at t0+59999 -> alert; at t0+60000 -> no alert
-    val (_, hit) = runKey(1L, Iterator((base, 0.5), (base + 59999, 600.0)))
+    val (_, hit) = fsm.run(Empty, Seq(Transaction(1L, base, 0.5), Transaction(1L, base + 59999, 600.0)))
     assert(hit.map(_.amount) == Seq(600.0))
-    val (_, miss) = runKey(1L, Iterator((base, 0.5), (base + 60000, 600.0)))
+    val (_, miss) = fsm.run(Empty, Seq(Transaction(1L, base, 0.5), Transaction(1L, base + 60000, 600.0)))
     assert(miss.isEmpty)
   }
 
   test("pure FSM: alert consumes the flag; medium txns don't disturb it") {
     // small, medium, large -> one alert; immediately another large -> none
-    val (_, alerts) = runKey(1L,
-      Iterator((base, 0.5), (base + 1000, 100.0), (base + 2000, 700.0), (base + 3000, 800.0)))
+    val (_, alerts) = fsm.run(Empty, Seq(Transaction(1L, base, 0.5), Transaction(1L, base + 1000, 100.0),
+      Transaction(1L, base + 2000, 700.0), Transaction(1L, base + 3000, 800.0)))
     assert(alerts.map(_.amount) == Seq(700.0))
   }
 
   test("pure FSM: a new small txn refreshes the timer") {
-    val (_, alerts) = runKey(1L,
-      Iterator((base, 0.5), (base + 50000, 0.9), (base + 100000, 600.0)))
+    val (_, alerts) = fsm.run(Empty,
+      Seq(Transaction(1L, base, 0.5), Transaction(1L, base + 50000, 0.9), Transaction(1L, base + 100000, 600.0)))
     assert(alerts.map(_.amount) == Seq(600.0)) // 50s after refresh, within window
   }
 

@@ -44,7 +44,7 @@ class PositionTrackerSpec extends SparkSpec {
   }
 
   test("stale feedback guard (T10): unmatched signal id never removes the position") {
-    val (s1, _) = runKey(Iterator(buy(t0, 1, "sig-1"), fb(t0 + 100, "sig-1", "SUCCESS", 2)))
+    val (s1, _) = fsm.run(EmptyState, Iterator(buy(t0, 1, "sig-1"), fb(t0 + 100, "sig-1", "SUCCESS", 2)))
     val (s2, e) = step(s1, fb(t0 + 200, "sig-OLD", "FAILED", 3))
     assert(actions(e) == Seq("IGNORED_STALE_FEEDBACK"))
     assert(s2.active("PWAVE").status == "OPEN") // untouched
@@ -58,7 +58,7 @@ class PositionTrackerSpec extends SparkSpec {
   }
 
   test("failed exit re-opens the position (still held on the exchange)") {
-    val (s1, _) = runKey(Iterator(
+    val (s1, _) = fsm.run(EmptyState, Iterator(
       buy(t0, 1, "sig-1"), fb(t0 + 100, "sig-1", "SUCCESS", 2), sell(t0 + 200, 3, "sig-2")))
     val (s2, e) = step(s1, fb(t0 + 300, "sig-2", "TIMEOUT", 4))
     assert(actions(e) == Seq("CLOSE_FAILED_REOPENED"))
@@ -67,7 +67,7 @@ class PositionTrackerSpec extends SparkSpec {
 
   test("3-tier restore defense (T11): TTL, active, and staleness rejections") {
     // tier 1: recently removed
-    val (s1, _) = runKey(Iterator(buy(t0, 1, "sig-1"), fb(t0 + 100, "sig-1", "FAILED", 2)))
+    val (s1, _) = fsm.run(EmptyState, Iterator(buy(t0, 1, "sig-1"), fb(t0 + 100, "sig-1", "FAILED", 2)))
     val r1 = Command("KRW-BTC", t0 + 200, t0 + 200, Restore, "", "PWAVE", "sig-r", "", 100.0)
     assert(actions(step(s1, r1)._2) == Seq("REJECTED_RESTORE_TTL"))
     // tier 2: active position exists
@@ -90,7 +90,7 @@ class PositionTrackerSpec extends SparkSpec {
     // after the sweep the reason is in TTL cooldown, so the buy is rejected
     assert(actions(e2).last == "REJECTED_RECENT_REMOVAL")
     assert(s2.active.isEmpty)
-    val (s3, _) = runKey(Iterator(
+    val (s3, _) = fsm.run(EmptyState, Iterator(
       buy(t0, 1, "sig-1"), fb(t0 + 10, "sig-1", "SUCCESS", 2), sell(t0 + 20, 3, "sig-2")))
     val (s4, e4) = step(s3, fb(t0 + 20 + PendingTimeoutMs + 1, "sig-OLD", "SUCCESS", 4))
     assert(actions(e4).head == "PENDING_CLOSE_TIMEOUT")
@@ -98,7 +98,7 @@ class PositionTrackerSpec extends SparkSpec {
   }
 
   test("clear removes unconditionally and arms the TTL") {
-    val (s1, _) = runKey(Iterator(buy(t0, 1, "sig-1"), fb(t0 + 100, "sig-1", "SUCCESS", 2)))
+    val (s1, _) = fsm.run(EmptyState, Iterator(buy(t0, 1, "sig-1"), fb(t0 + 100, "sig-1", "SUCCESS", 2)))
     val (s2, e) = step(s1, Command("KRW-BTC", t0 + 200, 3, Clear, "", "PWAVE", "", "", 0.0))
     assert(actions(e) == Seq("CLEARED"))
     assert(s2.active.isEmpty && s2.recentlyRemoved.contains("PWAVE"))

@@ -386,8 +386,7 @@ class StreamsSpec extends SparkSpec {
       q.processAllAvailable()
       val got = spark.table("density_stream").as[DensitySignals.Signal]
         .collect().sortBy(_.event_id).toSeq
-      val expected = DensitySignals.runKey(5L,
-        rows.sortBy(_.ts_ms).iterator.map(e => (e.ts_ms, e.event_id, e.value)))._2
+      val expected = DensitySignals.fsm.run(DensitySignals.fsm.empty, rows.sortBy(_.ts_ms))._2
       assert(got == expected)
       assert(got.map(_.event_id) == Seq(30L)) // only the crash event signals
       assert(got.head.baseline == 100.0)
