@@ -1,8 +1,11 @@
 package graft.core
 
+import java.nio.file.{Files, Paths}
+import java.util.{Comparator, UUID}
 import java.util.concurrent.atomic.LongAdder
 
 import scala.collection.concurrent.TrieMap
+import scala.util.Using
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
@@ -11,7 +14,7 @@ import graft.io.StoreListing
 
 /** The engine's one store cache: every memoized store (persisted
   * frames, graph stores, path-valued twins written once per input)
-  * is built through [[once]].
+  * is built through [[once]], a path-valued one through [[onDisk]].
   *
   * An entry is keyed by (session, dir, name) and remembers the
   * fingerprint of `dir`'s input listing taken when its build began:
@@ -24,8 +27,8 @@ import graft.io.StoreListing
   * (after `clearCache()`, or to time a cold build).
   *
   * The first build of a key runs exactly once, behind that key's lock:
-  * a racing duplicate build would strand a persisted frame or have two
-  * writers corrupt one store directory. Warm reads take no lock
+  * a racing duplicate build would strand a persisted frame or a store
+  * directory. Warm reads take no lock
   * (ConcurrencySpec pins both properties). [[hits]] and [[misses]]
   * count lookups, in total or per name.
   */
@@ -65,6 +68,31 @@ object Memo {
         v
       }
     }
+  }
+
+  /** A path-valued store: [[once]] whose `build` writes to a fresh
+    * directory private to this entry, `<root>/<name>-<uuid>`, that does
+    * not exist yet, so no build deletes or checks for its own path and
+    * two inputs never share one. `<root>` is one temp directory per
+    * JVM, removed at shutdown; releasing the entry (a changed input,
+    * [[clear]]) deletes its directory. */
+  def onDisk[V](spark: SparkSession, dir: String, name: String)(build: String => V): V =
+    once[(String, V)](spark, dir, name, built => deleteTree(built._1)) {
+      val path = storeRoot.resolve(s"$name-${UUID.randomUUID}").toString
+      (path, build(path))
+    }._2
+
+  private lazy val storeRoot: java.nio.file.Path = {
+    val root = Files.createTempDirectory("graft_store")
+    sys.addShutdownHook(deleteTree(root.toString))
+    root
+  }
+
+  private def deleteTree(path: String): Unit = {
+    val root = Paths.get(path)
+    if (Files.exists(root))
+      Using.resource(Files.walk(root))(_.sorted(Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => Files.deleteIfExists(p)))
   }
 
   /** Release every entry; the next lookup of each key builds again. */

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Scratch
 import graft.functions.Hashing
+import graft.io.DirSwap
 import graft.sources.Tables
 
 /**
@@ -239,21 +240,10 @@ object Curation {
         .coalesce(1)
       val provStage = new org.apache.hadoop.fs.Path(s"$base/stage_prov_$shard")
       newProv.write.mode("overwrite").parquet(provStage.toString)
-      // crash-safe swap: rename the live directory ASIDE (never a
-      // delete-first window where the shard has no data on disk),
-      // promote the stage, then drop the aside copy — a crash between
-      // any two steps leaves either the old or the new directory
-      // recoverable by name
-      val dataAside = new org.apache.hadoop.fs.Path(s"$base/old_shard_$shard")
-      fs.delete(dataAside, true)
-      fs.rename(dataDir, dataAside)
-      fs.rename(stage, dataDir)
-      val provAside = new org.apache.hadoop.fs.Path(s"$base/old_prov_$shard")
-      fs.delete(provAside, true)
-      fs.rename(provDir, provAside)
-      fs.rename(provStage, provDir)
-      fs.delete(dataAside, true)
-      fs.delete(provAside, true)
+      // each live directory is replaced through an aside (DirSwap), so
+      // a crash at any step leaves the old or the new copy by name
+      DirSwap.replace(fs, dataDir, stage)
+      DirSwap.replace(fs, provDir, provStage)
       fresh.unpersist()
     }
     shards.length.toLong

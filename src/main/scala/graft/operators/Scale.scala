@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.core.Memo
+import graft.io.DirSwap
 
 /**
  * Skew and co-location utilities — the remaining 100 TB levers beyond
@@ -687,14 +688,12 @@ object Scale {
   /** Build (once) the day-partitioned event store; returns its path. */
   def dayPartitionedEvents(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    Memo.once[String](spark, dir, "Scale.dayPartitionedEvents")({
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val path = s"target/day_events$tag"
+    Memo.onDisk(spark, dir, "Scale.dayPartitionedEvents") { path =>
       graft.sources.Tables.events(spark, dir)
         .withColumn("day", expr("unix_millis(ts) div 86400000"))
-        .write.mode("overwrite").partitionBy("day").parquet(path)
+        .write.partitionBy("day").parquet(path)
       path
-    })
+    }
 
   /** Gate: per-(day, type) rollup over one bounded week — the scan
     * must read 7 `day=` directories, not 30 (PlanSpec pins
@@ -752,15 +751,13 @@ object Scale {
     * cutoff expired. Memoized like the day store. */
   def retentionStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    Memo.once[String](spark, dir, "Scale.retentionStore")({
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val path = s"target/day_events_ret$tag"
+    Memo.onDisk(spark, dir, "Scale.retentionStore") { path =>
       graft.sources.Tables.events(spark, dir)
         .withColumn("day", expr("unix_millis(ts) div 86400000"))
-        .write.mode("overwrite").partitionBy("day").parquet(path)
+        .write.partitionBy("day").parquet(path)
       expireDays(spark, path, RetentionCutoffDay)
       path
-    })
+    }
 
   /** Gate: the full remaining store, no predicate — expiry IS the
     * filter. Oracle applies the cutoff to the original parquet. */
@@ -818,9 +815,7 @@ object Scale {
     val stage = new org.apache.hadoop.fs.Path(s"${path}_stage_day_$day")
     val fs = dayPath.getFileSystem(conf)
     fresh.write.mode("overwrite").parquet(stage.toString)
-    fs.delete(dayPath, true)
-    fs.rename(stage, dayPath)
-    ()
+    DirSwap.replace(fs, dayPath, stage)
   }
 
   /** Rewrite the whole store as one file per day: one day-keyed
@@ -834,21 +829,14 @@ object Scale {
     spark.read.parquet(path)
       .repartition(col("day"))
       .write.mode("overwrite").partitionBy("day").parquet(stage.toString)
-    fs.delete(p, true)
-    fs.rename(stage, p)
-    ()
+    DirSwap.replace(fs, p, stage)
   }
 
   /** Lifecycle twin: 3 corrupted appends → backfill the bad day →
     * compact. Memoized like the day store. */
   def dayLifecycleStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    Memo.once[String](spark, dir, "Scale.dayLifecycleStore")({
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val path = s"target/day_events_life$tag"
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true) // appends must start empty
+    Memo.onDisk(spark, dir, "Scale.dayLifecycleStore") { path =>
       val ev = graft.sources.Tables.events(spark, dir)
         .withColumn("day", expr("unix_millis(ts) div 86400000"))
         .select($"event_id", $"ts", $"user_id", $"event_type", $"value", $"day")
@@ -862,7 +850,7 @@ object Scale {
         ev.filter($"day" === BackfillDay).drop("day"))
       compactDayStore(spark, path)
       path
-    })
+    }
 
   /** Gate: rollup over the maintained store; oracle = the CLEAN
     * original parquet, no predicate — the corruption must be gone and
@@ -905,12 +893,7 @@ object Scale {
   /** Two-generation twin: v1 partitions without `source`, v2 with. */
   def evolvedStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    Memo.once[String](spark, dir, "Scale.evolvedStore")({
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val path = s"target/day_events_evo$tag"
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true) // appends must start empty
+    Memo.onDisk(spark, dir, "Scale.evolvedStore") { path =>
       val ev = graft.sources.Tables.events(spark, dir)
         .withColumn("day", expr("unix_millis(ts) div 86400000"))
       ev.filter($"day" < EvolveDay)
@@ -920,7 +903,7 @@ object Scale {
         .select($"event_id", $"event_type", $"value", lit("v2").as("source"), $"day")
         .write.mode("append").partitionBy("day").parquet(path)
       path
-    })
+    }
 
   /** Gate: one rollup over both schema generations. */
   def qSchemaEvolution(spark: org.apache.spark.sql.SparkSession,
@@ -965,12 +948,7 @@ object Scale {
     * INT32 before the boundary, INT64 from it on. */
   def widenedStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    Memo.once[String](spark, dir, "Scale.widenedStore")({
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val path = s"target/day_events_widen$tag"
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true) // appends must start empty
+    Memo.onDisk(spark, dir, "Scale.widenedStore") { path =>
       val ev = graft.sources.Tables.events(spark, dir)
         .withColumn("day", expr("unix_millis(ts) div 86400000"))
         .withColumn("cents",
@@ -983,7 +961,7 @@ object Scale {
         .select($"event_id", $"event_type", $"cents", $"day")
         .write.mode("append").partitionBy("day").parquet(path)
       path
-    })
+    }
 
   /** Per-generation read + cast-to-widest union: each generation's
     * `day=` directories are read under their OWN file schema (so the
@@ -1090,9 +1068,7 @@ object Scale {
     * dim bounds the box predicate derives from. Returns the base. */
   def zorderStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    Memo.once[String](spark, dir, "Scale.zorderStore")({
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val base = s"target/zorder_store$tag"
+    Memo.onDisk(spark, dir, "Scale.zorderStore") { base =>
       val e = graft.sources.Tables.events(spark, dir)
         .select($"event_id", $"user_id", $"event_type", $"value",
           unix_micros($"ts").as("tmu"))
@@ -1108,7 +1084,7 @@ object Scale {
         min($"tmu").as("b_min"), max($"tmu").as("b_max"))
         .coalesce(1).write.mode("overwrite").parquet(s"$base/bounds")
       base
-    })
+    }
 
   /** The gate's box: integer 3/8..5/8 fractions of each dim's span —
     * derived from the store's 1-row bounds file, exact at any SF. */
@@ -1220,9 +1196,7 @@ object Scale {
     * global id range the gate's probe set derives from. */
   def bloomStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    Memo.once[String](spark, dir, "Scale.bloomStore")({
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val base = s"target/bloom_store$tag"
+    Memo.onDisk(spark, dir, "Scale.bloomStore") { base =>
       val e = graft.sources.Tables.events(spark, dir)
         .select($"event_id", $"user_id", $"event_type",
           ($"value".cast(DEC) * 100).cast("long").as("cents"),
@@ -1234,7 +1208,7 @@ object Scale {
       e.agg(min($"event_id").as("lo"), max($"event_id").as("hi"))
         .coalesce(1).write.mode("overwrite").parquet(s"$base/bounds")
       base
-    })
+    }
 
   /** The gate's probe ids — {min, mid, max} of the id range from the
     * store's 1-row bounds file, exact at any SF (the mid id need not
@@ -1315,13 +1289,9 @@ object Scale {
     * through the new-files + manifest-append path. */
   def bloomIncStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    Memo.once[String](spark, dir, "Scale.bloomIncStore")({
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val base = s"target/bloom_inc_store$tag"
-      val conf = spark.sparkContext.hadoopConfiguration
-      val basePath = new org.apache.hadoop.fs.Path(base)
-      val fs = basePath.getFileSystem(conf)
-      fs.delete(basePath, true)
+    Memo.onDisk(spark, dir, "Scale.bloomIncStore") { base =>
+      val fs = new org.apache.hadoop.fs.Path(base)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val e = graft.sources.Tables.events(spark, dir)
         .select($"event_id", $"user_id", $"event_type",
           ($"value".cast(DEC) * 100).cast("long").as("cents"),
@@ -1342,7 +1312,7 @@ object Scale {
         .map { f =>
           val dst = new org.apache.hadoop.fs.Path(dataP,
             "part-inc-" + f.getPath.getName.stripPrefix("part-"))
-          fs.rename(f.getPath, dst)
+          DirSwap.rename(fs, f.getPath, dst)
           dst.toString
         }
       fs.delete(stage, true)
@@ -1351,7 +1321,7 @@ object Scale {
       e.agg(min($"event_id").as("lo"), max($"event_id").as("hi"))
         .coalesce(1).write.mode("overwrite").parquet(s"$base/bounds")
       base
-    })
+    }
 
   /** Gate: the X195 probe served from the incrementally-maintained
     * store — same probe rule, same reader, same oracle; agreement
@@ -1475,12 +1445,7 @@ object Scale {
     * files stay). Returns the base path. */
   def timeTravelStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    Memo.once[String](spark, dir, "Scale.timeTravelStore")({
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val base = s"target/tt_store$tag"
-      val basePath = new org.apache.hadoop.fs.Path(base)
-      basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(basePath, true)
+    Memo.onDisk(spark, dir, "Scale.timeTravelStore") { base =>
       val e = graft.sources.Tables.events(spark, dir)
         .select($"event_id", $"event_type",
           ($"value".cast(DEC) * 100).cast("long").as("cents"),
@@ -1498,7 +1463,7 @@ object Scale {
         .write.parquet(s"$base/compact3")
       ttWriteManifest(spark, base, 3, ttListFiles(spark, base, "compact3"))
       base
-    })
+    }
 
   /** Read snapshot `v`: the manifest's file list IS the table. */
   def readAsOf(spark: org.apache.spark.sql.SparkSession, base: String,
@@ -1579,7 +1544,7 @@ object Scale {
         try { fs.create(claim, false).close(); true }
         catch { case _: java.io.IOException => false }
       if (won) {
-        fs.rename(stage, new org.apache.hadoop.fs.Path(s"$base/manifests/v$cand"))
+        DirSwap.rename(fs, stage, new org.apache.hadoop.fs.Path(s"$base/manifests/v$cand"))
         committed = cand
       } else {
         fs.delete(stage, true)
@@ -1662,7 +1627,7 @@ object Scale {
       // through this same API: a fresh key can hash to a shard no row
       // ever landed in) is an empty current frame — the merge becomes
       // insert-only and CREATES the shard via the same stage-swap.
-      val shardExists = fs.exists(dirP)
+      val shardExists = DirSwap.exists(fs, dirP)
       val shardUpserts = upserts
         .filter(pmod($"k", lit(UpsertShards.toLong)) === shard)
         .join(delK, $"k" === $"dk", "left_anti")
@@ -1675,11 +1640,7 @@ object Scale {
         .coalesce(1)
       val stage = new org.apache.hadoop.fs.Path(s"$base/stage_upsert_$shard")
       merged.write.mode("overwrite").parquet(stage.toString)
-      val aside = new org.apache.hadoop.fs.Path(s"$base/old_upsert_$shard")
-      fs.delete(aside, true)
-      if (shardExists) fs.rename(dirP, aside)
-      fs.rename(stage, dirP)
-      fs.delete(aside, true)
+      DirSwap.replace(fs, dirP, stage)
     }
     touched.length.toLong
   }
@@ -1707,11 +1668,7 @@ object Scale {
           val merged = spark.read.parquet(s.getPath.toString).coalesce(1)
           val stage = new org.apache.hadoop.fs.Path(s"$base/stage_compact_$shard")
           merged.write.mode("overwrite").parquet(stage.toString)
-          val aside = new org.apache.hadoop.fs.Path(s"$base/old_compact_$shard")
-          fs.delete(aside, true)
-          fs.rename(s.getPath, aside)
-          fs.rename(stage, s.getPath)
-          fs.delete(aside, true)
+          DirSwap.replace(fs, s.getPath, stage)
           n += 1
         }
       }
@@ -1723,12 +1680,7 @@ object Scale {
     * applied through [[mergeUpsert]]. */
   def upsertStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    Memo.once[String](spark, dir, "Scale.upsertStore")({
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val base = s"target/upsert_store$tag"
-      val basePath = new org.apache.hadoop.fs.Path(base)
-      basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(basePath, true)
+    Memo.onDisk(spark, dir, "Scale.upsertStore") { base =>
       val o = graft.sources.Tables.orders(spark, dir)
         .select($"o_orderkey".as("k"), $"o_orderpriority".as("prio"),
           ($"o_totalprice".cast(DEC) * 100).cast("long").as("cents"))
@@ -1743,7 +1695,7 @@ object Scale {
         .select(($"k" + $"mk" + 1).as("k"), $"prio", ($"cents" + 1).as("cents"))
       mergeUpsert(spark, base, deletes, updates.unionByName(inserts))
       base
-    })
+    }
 
   /** Gate: per-priority rollup of the merged store vs the oracle's
     * semantic replay over raw orders. */

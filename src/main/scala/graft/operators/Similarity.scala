@@ -8,6 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.{Memo, Scratch}
+import graft.io.DirSwap
 import graft.sources.Tables
 
 /**
@@ -1389,14 +1390,12 @@ object Similarity {
 
   /** Build and persist the IVF artifacts; returns the base path. */
   def ivfArtifact(spark: SparkSession, dir: String): String =
-    Memo.once[String](spark, dir, "Similarity.ivfArtifact")({
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val base = s"target/ivf_artifact$tag"
+    Memo.onDisk(spark, dir, "Similarity.ivfArtifact") { base =>
       val ranked = rankedAssign(spark, dir).persist()
       buildIvfArtifact(ranked, base, lit(true))
       ranked.unpersist()
       base
-    })
+    }
 
   /** Gate: top-3 per query served purely from the persisted artifacts
     * — must match the in-memory X9 construction value-for-value. The
@@ -1446,9 +1445,7 @@ object Similarity {
   // increment ≡ rebuild: nothing lost, duplicated, or mis-celled.
   // ------------------------------------------------------------------
   def ivfArtifactInc(spark: SparkSession, dir: String): String =
-    Memo.once[String](spark, dir, "Similarity.ivfArtifactInc")({
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val base = s"target/ivf_artifact_inc$tag"
+    Memo.onDisk(spark, dir, "Similarity.ivfArtifactInc") { base =>
       val ranked = rankedAssign(spark, dir).persist()
       buildIvfArtifact(ranked, base,
         $"vec_id" % Dedup.IncomingMod =!= Dedup.IncomingRem)
@@ -1459,7 +1456,7 @@ object Similarity {
         incoming, Seq("vec_id"), s"$base/inverted", Seq("cell"))
       ranked.unpersist()
       base
-    })
+    }
 
   /** Gate: the X159 probe served from the incrementally-maintained
     * artifact; oracle = the full-corpus construction. */
@@ -1502,8 +1499,7 @@ object Similarity {
       spark.read.parquet(cellPath.toString)
         .filter($"vec_id" =!= vecId)
         .write.mode("overwrite").parquet(stage.toString)
-      fs.delete(cellPath, true)
-      fs.rename(stage, cellPath)
+      DirSwap.replace(fs, cellPath, stage)
     }
     ()
   }
@@ -1511,9 +1507,7 @@ object Similarity {
   /** Build a retraction twin: full artifact, then retract the rank-1
     * neighbor of the smallest query. Returns (base, retracted id). */
   def ivfArtifactRetract(spark: SparkSession, dir: String): (String, Long) =
-    Memo.once[(String, Long)](spark, dir, "Similarity.ivfArtifactRetract")({
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val base = s"target/ivf_artifact_ret$tag"
+    Memo.onDisk(spark, dir, "Similarity.ivfArtifactRetract") { base =>
       val ranked = rankedAssign(spark, dir).persist()
       buildIvfArtifact(ranked, base, lit(true))
       ranked.unpersist()
@@ -1522,7 +1516,7 @@ object Similarity {
       val rid = probeArtifact(spark, base).head.getLong(2)
       retractFromIvfArtifact(spark, base, rid)
       (base, rid)
-    })
+    }
 
   /** Gate: the probe after the takedown; oracle = the construction
     * with the victim excluded from the inverted lists. */

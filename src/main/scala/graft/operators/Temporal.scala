@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
 import graft.core.Memo
+import graft.io.DirSwap
 import graft.sources.Tables
 
 /**
@@ -429,9 +430,11 @@ object Temporal {
   // only shards carrying changed keys via stage-swap, untouched shards
   // stay byte-identical (Scd2ApplySpec pins it). Replay safety: a
   // (d_ms, o_orderkey) high-water mark filters already-applied rows,
-  // so redelivered batches touch zero shards (same batch-granularity
-  // crash posture as mergeUpsert: per-shard swaps are atomic, the
-  // watermark lands after the data). Contract: batches arrive in
+  // so redelivered batches touch zero shards. Each shard swap goes
+  // through an aside ([[graft.io.DirSwap]]), so a crash loses no shard;
+  // the watermark lands after the last swap, so a batch redelivered
+  // after a crash part-way through re-applies the shards it had already
+  // swapped. Contract: batches arrive in
   // event-time order — every fresh row is later than the key's stored
   // history, which the time-cut batching guarantees.
   // ------------------------------------------------------------------
@@ -512,7 +515,7 @@ object Temporal {
         // a missing shard dir (sparse keyed store) is an empty current
         // frame — the mergeUpsert posture: insert-only, shard created
         // by the same stage-swap
-        val shardExists = fs.exists(dirP)
+        val shardExists = DirSwap.exists(fs, dirP)
         val cur =
           if (shardExists) spark.read.parquet(dirP.toString)
           else spark.emptyDataFrame
@@ -560,11 +563,7 @@ object Temporal {
           .coalesce(1)
         val stage = new org.apache.hadoop.fs.Path(s"$base/stage_scd2_$shard")
         merged.write.mode("overwrite").parquet(stage.toString)
-        val aside = new org.apache.hadoop.fs.Path(s"$base/old_scd2_$shard")
-        fs.delete(aside, true)
-        if (shardExists) fs.rename(dirP, aside)
-        fs.rename(stage, dirP)
-        fs.delete(aside, true)
+        DirSwap.replace(fs, dirP, stage)
       }
       wmRow.coalesce(1).write.mode("overwrite").parquet(s"$base/wm")
     }
@@ -572,11 +571,9 @@ object Temporal {
     touched.length.toLong
   }
 
-  /** Initialize the sharded interval store from a change log. */
+  /** Initialize the sharded interval store at a new path `base` from
+    * a change log. */
   def scd2InitStore(spark: SparkSession, base: String, log: DataFrame): Unit = {
-    val basePath = new org.apache.hadoop.fs.Path(base)
-    basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(basePath, true)
     scd2Intervals(log)
       .withColumn("shard", pmod($"c_custkey", lit(Scd2Shards.toLong)))
       .repartition(Scd2Shards, $"shard")
@@ -596,9 +593,7 @@ object Temporal {
     * EXCEPT the last [[Scd2TailDays]] days, then that tail applied as
     * one incremental change batch. */
   def scd2Store(spark: SparkSession, dir: String): String =
-    Memo.once[String](spark, dir, "Temporal.scd2Store")({
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val base = s"target/scd2_store$tag"
+    Memo.onDisk(spark, dir, "Temporal.scd2Store") { base =>
       val log = ordersLog(spark, dir)
       // bounded 1-row model read: the tail cut of the initial build
       val cut = log.agg(max($"d_ms")).head.getLong(0) -
@@ -606,7 +601,7 @@ object Temporal {
       scd2InitStore(spark, base, log.filter($"d_ms" < cut))
       scd2Apply(spark, base, log.filter($"d_ms" >= cut))
       base
-    })
+    }
 
   /** Gate: the incrementally-maintained interval store must equal the
     * full rebuild over log ∪ batch — the oracle is X131's full-log

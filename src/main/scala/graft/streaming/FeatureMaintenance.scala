@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.io.DirSwap
+
 /**
  * Streaming user-feature-store maintenance (X212 — the online half of
  * X207, productized the way [[CdcSink]] productized X199: the
@@ -21,11 +23,15 @@ import org.apache.spark.sql.functions._
  * sessions_after = sessions_before + (in-batch gaps > 1800) +
  * (1 if the batch's first event opens a new session against the
  * stored last_ts). Store layout: 16 user-hashed `shard=` parquet dirs
- * (the X199 layout), stage-swapped per touched shard. Replay safety:
+ * (the X199 layout), stage-swapped per touched shard through an aside
+ * ([[graft.io.DirSwap]]), so a crash loses no shard. Replay safety:
  * a (ts_s, event_id) high-water mark filters already-applied rows, so
- * a redelivered batch touches zero shards. Contract: batches arrive
- * in (ts_s, event_id) order — the watermark REJECTS time travel
- * rather than silently double-counting (the Attribution posture).
+ * a redelivered batch touches zero shards; the mark lands after the
+ * last swap, so a batch redelivered after a crash part-way through
+ * counts its events in the shards already swapped twice. Contract:
+ * batches arrive in (ts_s, event_id) order — the watermark REJECTS
+ * time travel rather than silently double-counting (the Attribution
+ * posture).
  */
 class FeatureMaintenance(base: String) {
   import graft.operators.Relational.ColInterp
@@ -74,7 +80,7 @@ class FeatureMaintenance(base: String) {
       touched.foreach { shard =>
         val dirP = new org.apache.hadoop.fs.Path(s"$base/data/shard=$shard")
         val fs = dirP.getFileSystem(conf)
-        val shardExists = fs.exists(dirP)
+        val shardExists = DirSwap.exists(fs, dirP)
         val cur =
           if (shardExists) spark.read.parquet(dirP.toString)
           else spark.emptyDataFrame
@@ -108,11 +114,7 @@ class FeatureMaintenance(base: String) {
           .coalesce(1)
         val stage = new org.apache.hadoop.fs.Path(s"$base/stage_feat_$shard")
         merged.write.mode("overwrite").parquet(stage.toString)
-        val aside = new org.apache.hadoop.fs.Path(s"$base/old_feat_$shard")
-        fs.delete(aside, true)
-        if (shardExists) fs.rename(dirP, aside)
-        fs.rename(stage, dirP)
-        fs.delete(aside, true)
+        DirSwap.replace(fs, dirP, stage)
       }
       wmRow.coalesce(1).write.mode("overwrite").parquet(s"$base/wm")
     }

@@ -33,27 +33,6 @@ import graft.sources.Tables
 object WireIngest {
   import graft.operators.Relational.ColInterp
 
-  /** The idempotent store for one (session, input): the SAME path
-    * while the query re-runs on unchanged input (warm + timed passes),
-    * so the second append is provably a no-op, and a new path once the
-    * input changes ([[Memo]]). Stores live under one scratch root per
-    * JVM, deleted at shutdown, so stale stores from older code never
-    * leak in and a long-lived service leaves no directories behind. */
-  private lazy val storeRoot: java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory("graft_wire_store")
-    sys.addShutdownHook(deleteRecursively(root))
-    root
-  }
-
-  private def deleteRecursively(root: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(root)) {
-      val all = java.nio.file.Files.walk(root)
-      try
-        all.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally all.close()
-    }
-
   /** The deterministic events→frames synthesis (one JSON frame per
     * event, doubled for at-least-once delivery). `to_json` drops null
     * struct fields, which is what makes `when` without `otherwise`
@@ -88,8 +67,10 @@ object WireIngest {
   }
 
   def qWireIngest(spark: SparkSession, dir: String): DataFrame = {
-    val store = Memo.once[String](spark, dir, "WireIngest.store")(
-      java.nio.file.Files.createTempDirectory(storeRoot, "store").toString)
+    // the SAME store while the query re-runs on unchanged input (warm +
+    // timed passes), so the second append is provably a no-op; a new
+    // one once the input changes
+    val store = Memo.onDisk(spark, dir, "WireIngest.store")(identity)
     val trades = UpbitWire.parseTrades(
       frames(spark, dir), "frame", "Upbit", $"ts_ms" + 5)
     val decoded = Streams.tradesFromProtoRecords(

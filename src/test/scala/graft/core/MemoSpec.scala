@@ -15,7 +15,8 @@ import graft.operators.{Corpus, Scale}
 /** The store cache answers for the files under its `dir` as they are
   * now: a table rewritten in place between two lookups in one session
   * must yield the new answer, for a persisted frame and for a
-  * path-valued store alike. */
+  * path-valued store alike; a path-valued store is private to its
+  * input and deleted when its entry is released. */
 class MemoSpec extends SparkSpec {
 
   /** A scratch input dir holding `tables` copied from sf0.001, each as
@@ -97,5 +98,24 @@ class MemoSpec extends SparkSpec {
     assert(freshLookups == (1L, 0L))
     val after = spark.read.parquet(again).count()
     assert(after == spark.read.parquet(s"$dir/events.parquet").count() && after < before)
+    assert(!Files.exists(Paths.get(path)), "the rebuild deletes the replaced store")
+
+    // two inputs whose paths differ only in '.' against '_' each get a
+    // store of their own rows
+    val parent = Files.createTempDirectory("graft_memo")
+    val (dotted, plain) = (parent.resolve("in.a").toString, parent.resolve("in_a").toString)
+    Seq(dotted, plain).foreach(d => Files.createDirectories(Paths.get(d)))
+    rewrite(dotted, "events")(identity)
+    rewrite(plain, "events")(_.filter(col("event_id") % 2 === 0))
+    val stores = Seq(dotted, plain).map(d => d -> Scale.dayPartitionedEvents(spark, d))
+    stores.foreach { case (d, store) =>
+      assert(spark.read.parquet(store).count() == spark.read.parquet(s"$d/events.parquet").count(),
+        s"the store of $d holds its own input's rows")
+    }
+
+    Memo.clear()
+    (again +: stores.map(_._2)).foreach { store =>
+      assert(!Files.exists(Paths.get(store)), s"clear deletes $store")
+    }
   }
 }

@@ -980,8 +980,10 @@ class PlanSpec extends SparkSpec {
 
   test("q_ann_artifact: the inverted-file scan partition-prunes to the probed cells") {
     val plan = executedCold(Similarity.qAnnArtifact(spark, Sf0001))
+    // the inverted file is the scan whose rows start with vec_id (the
+    // queries file starts with query_id)
     val invScan = plan.linesIterator
-      .filter(l => l.contains("ivf_artifact") && l.contains("inverted"))
+      .filter(l => l.contains("FileScan parquet [vec_id#"))
       .mkString("\n")
     assert(invScan.contains("PartitionFilters: [cell") && invScan.contains(" IN ("),
       "probe must reach the scan as a literal partition filter:\n" + invScan)
@@ -991,7 +993,7 @@ class PlanSpec extends SparkSpec {
   test("q_time_prune: the day-partitioned scan prunes to the 7 days inside the range") {
     val plan = executedCold(Scale.qTimePrune(spark, Sf0001))
     val scan = plan.linesIterator
-      .filter(l => l.contains("day_events") && l.contains("PartitionFilters"))
+      .filter(l => l.contains("FileScan parquet") && l.contains("PartitionFilters"))
       .mkString("\n")
     // the hypertable chunk-exclusion shape: the time predicate reaches
     // the scan as a PARTITION filter (directory pruning), not a data

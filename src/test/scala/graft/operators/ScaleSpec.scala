@@ -503,7 +503,7 @@ class ScaleSpec extends SparkSpec {
     // everything below v3 deletes files yet v3 still serves
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(conf)
-    val copy = s"target/tt_vacuum_copy"
+    val copy = java.nio.file.Files.createTempDirectory("tt_vacuum").toString + "/copy"
     fs.delete(new org.apache.hadoop.fs.Path(copy), true)
     org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(base),
       fs, new org.apache.hadoop.fs.Path(copy), false, conf)
@@ -613,7 +613,7 @@ class ScaleSpec extends SparkSpec {
   test("mergeUpsert: deletes/updates/inserts land, precedence holds, untouched shards stay byte-identical") {
     import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
-    val base = "target/upsert_spec_store"
+    val base = java.nio.file.Files.createTempDirectory("upsert_spec").toString + "/store"
     val basePath = new org.apache.hadoop.fs.Path(base)
     val fs = basePath.getFileSystem(conf)
     fs.delete(basePath, true)
@@ -673,6 +673,26 @@ class ScaleSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
     assert(after(21L) == ("PN", 42L), "fresh key lands in the created shard")
     assert(after.size == 5, "existing rows untouched")
+  }
+
+  test("mergeUpsert after a crash between the two renames of a shard swap keeps the shard's old rows") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("upsert_crash").toString + "/store"
+    (0L until 64L).map(k => (k, s"P${k % 3}", k + 7L))
+      .toDF("k", "prio", "cents")
+      .withColumn("shard", pmod($"k", lit(Scale.UpsertShards.toLong)))
+      .repartition(Scale.UpsertShards, $"shard")
+      .write.partitionBy("shard").parquet(s"$base/data")
+    // the crash state: shard 1 moved to its aside, the stage not yet in
+    val live = new org.apache.hadoop.fs.Path(s"$base/data/shard=1")
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    graft.io.DirSwap.rename(fs, live, graft.io.DirSwap.aside(live))
+    Scale.mergeUpsert(spark, base, Seq.empty[Long].toDF("k"),
+      Seq((1000001L, "PN", 5L)).toDF("k", "prio", "cents")) // 1000001 % 16 = 1
+    val shard1 = spark.read.parquet(s"$base/data").filter($"shard" === 1)
+      .select($"k").as[Long].collect().sorted.toSeq
+    assert(shard1 == Seq(1L, 17L, 33L, 49L, 1000001L),
+      s"the shard's old rows plus the batch, got $shard1")
   }
 
   // X210 — runtime bloom-join prefilter (the explicit deterministic

@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
 import graft.SparkSpec
 import graft.SparkSpec.Sf0001
 import graft.core.Memo
-import graft.operators.{Clustering, Corpus, Graph}
+import graft.operators.{Clustering, Corpus, Graph, Scale}
 
 /** Concurrency contract of the session-scoped memoized stores
   * ([[graft.core.Memo.once]]) and of the query surface itself: a
@@ -48,6 +48,13 @@ class ConcurrencySpec extends SparkSpec {
     val stores = inParallel(8)(_ => Graph.transactionEdgeStore(spark, Sf0001))
     assert(stores.map(System.identityHashCode).distinct.size == 1,
       "the edge store must build once under a concurrent first read")
+
+    Memo.clear()
+    val dayStore = "Scale.dayPartitionedEvents"
+    val missesBefore = Memo.misses(dayStore)
+    val paths = inParallel(8)(_ => Scale.dayPartitionedEvents(spark, Sf0001))
+    assert(paths.distinct.size == 1 && Memo.misses(dayStore) - missesBefore == 1,
+      "the day store directory must be written once under a concurrent first read")
   }
 
   test("concurrent gates on one session equal their serial results") {
